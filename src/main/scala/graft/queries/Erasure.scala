@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.sources.IndexManifest
+import graft.sources.StoredIndex
 
 /** One-call right-to-be-forgotten across the stored-artifact fleet.
   *
@@ -72,7 +72,7 @@ object Erasure {
     def remaining(snapshot: Map[String, Long]): DocTargets = {
       def keep(tag: String, p: Option[String]): Option[String] =
         p.filter(path => snapshot.get(tag).forall(pre =>
-          IndexManifest.committedEpoch(path, fmtOf(tag)) == pre))
+          declOf(tag).head(path) == pre))
       DocTargets(
         postings = keep("postings", postings),
         lsh = keep("lsh", lsh),
@@ -101,7 +101,7 @@ object Erasure {
     def remaining(snapshot: Map[String, Long]): UserTargets = {
       def keep(tag: String, p: Option[String]): Option[String] =
         p.filter(path => snapshot.get(tag).forall(pre =>
-          IndexManifest.committedEpoch(path, fmtOf(tag)) == pre))
+          declOf(tag).head(path) == pre))
       UserTargets(
         cooccur = keep("cooccur", cooccur),
         transition = keep("transition", transition),
@@ -109,25 +109,18 @@ object Erasure {
     }
   }
 
-  private def fmtOf(tag: String): IndexManifest.Format = tag match {
-    case "postings"   => IndexManifest.Postings
-    case "lsh"        => IndexManifest.Lsh
-    case "shingle"    => IndexManifest.Shingle
-    case "scd2"       => IndexManifest.Scd2
-    case "ivfpq"      => IndexManifest.IvfPq
-    case "bq"         => IndexManifest.Bq
-    case "sq8"        => IndexManifest.Sq8
-    case "cooccur"    => IndexManifest.Cooccur
-    case "transition" => IndexManifest.Transition
-    case "table"      => IndexManifest.Layout
-  }
+  /** A target tag's declaration — the tags are the family tags, except
+    * `table` (persisted in intent ledgers) for the event table.
+    */
+  private def declOf(tag: String): StoredIndex =
+    StoredIndex.byFamily(if (tag == "table") StoredIndex.Layout.family else tag)
 
   /** Snapshot each target's committed epoch — the caller's pre-call
     * ledger entry for the resume protocol.
     */
   def committedEpochs(targets: Seq[(String, String)]): Map[String, Long] =
     targets.map { case (tag, path) =>
-      tag -> IndexManifest.committedEpoch(path, fmtOf(tag))
+      tag -> declOf(tag).head(path)
     }.toMap
 
   /** Erase documents from every deployed doc-grain artifact.
@@ -376,7 +369,7 @@ object Erasure {
       case "postings" => Some(SearchOps.storedPostings(s, path)
         .drop("epoch").select(col("doc_id")))
       case "lsh"      => Some(TextOps.storedLshBands(s, path).select(col("doc_id")))
-      case "ivfpq"    => Some(VectorOps.storedIvfPqCodes(s, path)
+      case "ivfpq"    => Some(StoredIndex.IvfPq.resolved(s, path)
         .select(col("vec_id").as("doc_id")))
       case "bq"       => Some(VectorOps.storedBqWords(s, path)
         .select(col("vec_id").as("doc_id")))

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.sources.Tables
+import graft.sources.{StoredIndex, Tables}
 
 /** Behavioral-graph analytics over the `events` table — the
   * user-journey layer a product-analytics engine builds on top of the
@@ -330,11 +330,15 @@ object GraphOps {
     import graft.sources.IndexManifest
     val s = evs.sparkSession
     import s.implicits._
-    transitionEdges(evs)
-      .write.mode("overwrite").parquet(IndexManifest.epochDir(path, "edges", 0L))
-    evs.filter($"item".isNotNull).select($"item").distinct()
-      .write.mode("overwrite").parquet(IndexManifest.epochDir(path, "nodes", 0L))
-    IndexManifest.commit(path, 0L, fmt = IndexManifest.Transition)
+    // edges and nodes both derive from `evs`: the declaration runs the
+    // transition graph's writes in order, never concurrently
+    StoredIndex.Transition.build(s, path)(
+      "edges" -> (() =>
+        transitionEdges(evs)
+          .write.mode("overwrite").parquet(IndexManifest.epochDir(path, "edges", 0L))),
+      "nodes" -> (() =>
+        evs.filter($"item".isNotNull).select($"item").distinct()
+          .write.mode("overwrite").parquet(IndexManifest.epochDir(path, "nodes", 0L))))
   }
 
   /** Fold a NEW slice of the event log into the stored transition graph
@@ -360,12 +364,8 @@ object GraphOps {
     * an append that already COMMITTED folds the same delta in twice.
     * The caller's ingest ledger must not re-feed committed batches.
     */
-  def appendTransitionGraph(deltaWithCarry: DataFrame, path: String): Unit = {
-    import graft.sources.IndexManifest
-    val e = IndexManifest.committedEpoch(path, IndexManifest.Transition) + 1L
-    stageTransitionAppend(deltaWithCarry, path, e)
-    IndexManifest.advance(path, e, IndexManifest.Transition)
-  }
+  def appendTransitionGraph(deltaWithCarry: DataFrame, path: String): Unit =
+    StoredIndex.Transition.nextEpoch(path)(stageTransitionAppend(deltaWithCarry, path, _))
 
   /** Stage (but do NOT commit) epoch `e` of a transition-graph append —
     * exposed for the atomicity spec.
@@ -435,12 +435,8 @@ object GraphOps {
     * a partial slice under-subtracts, a replayed forget
     * double-subtracts (the appenders' ledger discipline).
     */
-  def forgetTransitionUsers(userEvs: DataFrame, path: String): Unit = {
-    import graft.sources.IndexManifest
-    val e = IndexManifest.committedEpoch(path, IndexManifest.Transition) + 1L
-    stageTransitionForget(userEvs, path, e)
-    IndexManifest.advance(path, e, IndexManifest.Transition)
-  }
+  def forgetTransitionUsers(userEvs: DataFrame, path: String): Unit =
+    StoredIndex.Transition.nextEpoch(path)(stageTransitionForget(userEvs, path, _))
 
   /** PageRank against the STORED graph — identical ranking contract to
     * the inline `e_pagerank` (the parity spec pins it); touches only
@@ -743,8 +739,11 @@ object GraphOps {
       .select($"user_id", $"item").distinct()
       .localCheckpoint(true) // three consumers: ui, degrees, pairs
     // independent epoch-0 components under one commit, overlapped
-    // (guide §2.6) — all three read the already-materialized ui blocks
-    graft.sources.Overlap.run(
+    // (guide §2.6) — all three read the already-materialized ui blocks;
+    // the declaration adds the empty user-tombstone epoch (format v3
+    // added `dels/` — the per-family version gate keeps v2 indexes from
+    // being mis-read as forgettable)
+    StoredIndex.Cooccur.build(s, path)(
       "ui" -> (() =>
         ui.write.mode("overwrite").parquet(IndexManifest.epochDir(path, "ui", 0L))),
       "degrees" -> { () =>
@@ -754,15 +753,7 @@ object GraphOps {
       "pairs" -> { () =>
         pairSupport(cappedUi(ui, cap))
           .write.mode("overwrite").parquet(IndexManifest.epochDir(path, "pairs", 0L))
-      },
-      // user tombstones start empty, schema-carrying (the LSH/BQ pattern);
-      // format v3 added this component — the per-family version gate keeps
-      // v2 indexes (no dels/) from being mis-read as forgettable
-      "dels" -> { () =>
-        Seq.empty[Long].toDF("user_id").write.mode("overwrite")
-          .parquet(IndexManifest.epochDir(path, "dels", 0L))
       })
-    IndexManifest.commit(path, 0L, fmt = IndexManifest.Cooccur)
   }
 
   /** The RESOLVED (user_id, item) rows of the stored index: the
@@ -773,15 +764,8 @@ object GraphOps {
     * Every index reader (fold, communities, recommendations) goes
     * through this view; the raw component is never consumed directly.
     */
-  private[graft] def resolvedUi(s: SparkSession, path: String): DataFrame = {
-    import graft.sources.IndexManifest
-    val ui = IndexManifest.readAppendOnlyEpochs(s, path, "ui", IndexManifest.Cooccur)
-    val dels = IndexManifest.readAppendOnlyEpochs(s, path, "dels", IndexManifest.Cooccur)
-      .groupBy(col("user_id")).agg(max(col("epoch")).as("del_epoch"))
-    ui.join(dels, Seq("user_id"), "left")
-      .filter(col("del_epoch").isNull || col("epoch") > col("del_epoch"))
-      .drop("epoch", "del_epoch")
-  }
+  private[graft] def resolvedUi(s: SparkSession, path: String): DataFrame =
+    StoredIndex.Cooccur.resolved(s, path)
 
   /** Stage (but do NOT commit) epoch `e` of a co-occurrence fold —
     * exposed for the atomicity drill.
@@ -851,12 +835,8 @@ object GraphOps {
     * The caller's ingest ledger must not re-feed committed batches.
     */
   def appendCooccurIndex(deltaEvs: DataFrame, path: String,
-      cap: Long = maxUserDegree): Unit = {
-    import graft.sources.IndexManifest
-    val e = IndexManifest.committedEpoch(path, IndexManifest.Cooccur) + 1L
-    stageCooccurAppend(deltaEvs, path, e, cap)
-    IndexManifest.advance(path, e, IndexManifest.Cooccur)
-  }
+      cap: Long = maxUserDegree): Unit =
+    StoredIndex.Cooccur.nextEpoch(path)(stageCooccurAppend(deltaEvs, path, _, cap))
 
   /** Stage (but do NOT commit) a user-forget epoch — for the kill
     * drill.
@@ -913,48 +893,19 @@ object GraphOps {
     * (the appenders' ledger discipline).
     */
   def forgetCooccurUsers(users: DataFrame, path: String,
-      cap: Long = maxUserDegree): Unit = {
-    import graft.sources.IndexManifest
-    val e = IndexManifest.committedEpoch(path, IndexManifest.Cooccur) + 1L
-    stageCooccurForget(users, path, e, cap)
-    IndexManifest.advance(path, e, IndexManifest.Cooccur)
-  }
+      cap: Long = maxUserDegree): Unit =
+    StoredIndex.Cooccur.nextEpoch(path)(stageCooccurForget(users, path, _, cap))
 
   /** Compact the co-occurrence index: fold the accreted ui epochs into
     * one RESOLVED directory (tombstoned users' rows become physically
     * absent — the erasure guarantee's second half), reset the
     * tombstones, copy the rewrite tables forward, and rebase the
     * committed window. A verbatim epoch-preserving fold would break the
-    * precedence rule (the LSH/BQ compactors' argument), so this stages
-    * the resolved view by hand rather than using the generic
-    * [[graft.sources.IndexManifest.stageCompact]].
+    * precedence rule (the LSH/BQ compactors' argument), so the
+    * declaration's compaction folds the resolved view.
     */
-  def compactCooccurIndex(s: SparkSession, path: String): Unit = {
-    import graft.sources.IndexManifest
-    import s.implicits._
-    val st = IndexManifest.committedState(path, IndexManifest.Cooccur)
-    val e = st.epoch + 1L
-    // the four fold writes are independent under one commit (§2.6)
-    graft.sources.Overlap.run(
-      Seq(
-        "ui" -> (() =>
-          resolvedUi(s, path).write.mode("overwrite")
-            .parquet(IndexManifest.epochDir(path, "ui", e))),
-        "dels" -> { () =>
-          Seq.empty[Long].toDF("user_id").write.mode("overwrite")
-            .parquet(IndexManifest.epochDir(path, "dels", e))
-        }) ++
-        Seq("pairs", "degrees").map(comp => comp -> { () =>
-          IndexManifest.readRewrite(s, path, comp, IndexManifest.Cooccur)
-            .write.mode("overwrite").parquet(IndexManifest.epochDir(path, comp, e))
-        }): _*)
-    val st2 = IndexManifest.committedState(path, IndexManifest.Cooccur)
-    if (st2.epoch != st.epoch)
-      throw new java.util.ConcurrentModificationException(
-        s"index at $path: compaction staged epoch $e over committed ${st.epoch} " +
-          s"but found ${st2.epoch} at commit time - re-run (single-writer contract)")
-    IndexManifest.commit(path, e, baseEpoch = e, IndexManifest.Cooccur)
-  }
+  def compactCooccurIndex(s: SparkSession, path: String): Unit =
+    StoredIndex.Cooccur.compact(s, path)
 
   /** Top-k co-visited pairs from the STORED index — e_item_cooccur's
     * ranking contract over the persisted pair table (the spec pins

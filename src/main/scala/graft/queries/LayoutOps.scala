@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.sources.Tables
+import graft.sources.{StoredIndex, Tables}
 
 /** Z-order (Morton) data layout — the multi-dimensional file-skipping
   * lever every 100 TB table layout eventually needs: a table range-
@@ -362,20 +362,11 @@ object LayoutOps {
     * tombstones (schema-carrying, the scd2 `closed` pattern), manifest
     * commit.
     */
-  def writeEventTable(evs: DataFrame, path: String, nFiles: Int = 16): Unit = {
-    import graft.sources.IndexManifest
-    val s = evs.sparkSession
-    import s.implicits._
+  def writeEventTable(evs: DataFrame, path: String, nFiles: Int = 16): Unit =
     // data+zonemap staging and the empty tombstone epoch are
     // independent under the one commit (§2.6)
-    graft.sources.Overlap.run(
-      "data" -> (() => stageTableEpoch(evs, path, 0L, nFiles)),
-      "dels" -> { () =>
-        Seq.empty[Long].toDF("user_id").write.mode("overwrite")
-          .parquet(IndexManifest.epochDir(path, "dels", 0L))
-      })
-    IndexManifest.commit(path, 0L, fmt = IndexManifest.Layout)
-  }
+    StoredIndex.Layout.build(evs.sparkSession, path)(
+      "data" -> (() => stageTableEpoch(evs, path, 0L, nFiles)))
 
   /** Forget users from the event table — the right-to-be-forgotten
     * path for the SOURCE LOG itself (every derived index family
@@ -396,45 +387,15 @@ object LayoutOps {
     * matching rows were forgotten; the residual resolve keeps results
     * exact, compaction re-tightens the stats).
     */
-  def forgetEventTableUsers(users: DataFrame, path: String): Unit = {
-    import graft.sources.IndexManifest
-    val e = IndexManifest.committedEpoch(path, IndexManifest.Layout) + 1L
-    users.select(col("user_id").cast("long")).distinct()
-      .write.mode("overwrite")
-      .parquet(IndexManifest.epochDir(path, "dels", e))
-    IndexManifest.advance(path, e, IndexManifest.Layout)
-  }
-
-  /** Resolve a data read (with its `epoch` column) against the user
-    * tombstones of the same window: a row survives unless its user was
-    * tombstoned at-or-after the row's epoch.
-    */
-  private def resolveDels(s: SparkSession, data: DataFrame, path: String,
-      asOf: Option[Long]): DataFrame = {
-    import graft.sources.IndexManifest
-    import s.implicits._
-    val dels = IndexManifest
-      .readAppendOnlyEpochs(s, path, "dels", IndexManifest.Layout, asOf)
-      .groupBy($"user_id").agg(max($"epoch").as("del_epoch"))
-    data.join(broadcast(dels), Seq("user_id"), "left")
-      .filter($"del_epoch".isNull || $"epoch" > $"del_epoch")
-      .drop("del_epoch", "epoch")
-    // broadcast: the tombstone set is bounded by erasure-request volume
-    // since the last compaction (which makes deletes physical and
-    // empties it), not by table size — the deletion-vector assumption
-    // every table format makes
-  }
+  def forgetEventTableUsers(users: DataFrame, path: String): Unit =
+    StoredIndex.Layout.forget(users, path)
 
   /** Fold an ingest batch in: the batch's own z-range files + zone-map
     * rows stage under a fresh epoch, the manifest advance is the commit
     * point (crash before it = invisible files, idempotent retry).
     */
-  def appendEventTable(delta: DataFrame, path: String, nFiles: Int = 4): Unit = {
-    import graft.sources.IndexManifest
-    val e = IndexManifest.committedEpoch(path, IndexManifest.Layout) + 1L
-    stageTableEpoch(delta, path, e, nFiles)
-    IndexManifest.advance(path, e, IndexManifest.Layout)
-  }
+  def appendEventTable(delta: DataFrame, path: String, nFiles: Int = 4): Unit =
+    StoredIndex.Layout.nextEpoch(path)(stageTableEpoch(delta, path, _, nFiles))
 
   /** Fold the table's committed epoch window into ONE fresh set of
     * balanced z-range files and rebase the window — the maintenance
@@ -445,29 +406,11 @@ object LayoutOps {
     * family compactor: stage under a fresh epoch, commit with
     * floor = epoch; superseded epochs become vacuumable garbage.
     */
-  def compactEventTable(s: SparkSession, path: String, nFiles: Int = 16): Unit = {
-    import graft.sources.IndexManifest
-    import s.implicits._
-    val st = IndexManifest.committedState(path, IndexManifest.Layout)
-    val e = st.epoch + 1L
+  def compactEventTable(s: SparkSession, path: String, nFiles: Int = 16): Unit =
     // the RESOLVED view (tombstones applied) + an empty tombstone epoch
-    // — forgotten rows become physically absent here, and folding dels
-    // verbatim would break epoch precedence for re-ingested users (the
-    // compactBqIndex discipline)
-    val resolved = readEventTable(s, path)
-    graft.sources.Overlap.run(
-      "data" -> (() => stageTableEpoch(resolved, path, e, nFiles)),
-      "dels" -> { () =>
-        Seq.empty[Long].toDF("user_id").write.mode("overwrite")
-          .parquet(IndexManifest.epochDir(path, "dels", e))
-      })
-    val st2 = IndexManifest.committedState(path, IndexManifest.Layout)
-    if (st2.epoch != st.epoch)
-      throw new java.util.ConcurrentModificationException(
-        s"table at $path: compaction staged epoch $e over committed ${st.epoch} " +
-          s"but found ${st2.epoch} at commit time - re-run (single-writer contract)")
-    IndexManifest.commit(path, e, baseEpoch = e, IndexManifest.Layout)
-  }
+    // — forgotten rows become physically absent here
+    StoredIndex.Layout.compact(s, path, fold = Some(e =>
+      stageTableEpoch(readEventTable(s, path), path, e, nFiles)))
 
   /** Exact box scan over the committed (or as-of pinned) table window:
     * zone-map rows of the window, intersect, read only those files,
@@ -488,11 +431,11 @@ object LayoutOps {
       // every pruned scan with an O(table) footer pass
       s.read.option("basePath", s"$path/data").parquet(s"$path/data")
         .drop("epoch").filter(lit(false))
-    else resolveDels(s,
+    else StoredIndex.Layout.resolve(s, path,
       // basePath recovers the `epoch` partition column from the file
       // paths — tombstone precedence needs the row's epoch
       s.read.option("basePath", s"$path/data").parquet(files: _*),
-      path, asOf)
+      asOf)
       .filter($"user_id".between(uLo, uHi) && $"day".between(dLo, dHi))
   }
 
@@ -503,13 +446,8 @@ object LayoutOps {
     * analytics catalog serves from.
     */
   def readEventTable(s: SparkSession, path: String,
-      asOf: Option[Long] = None): DataFrame = {
-    import graft.sources.IndexManifest
-    resolveDels(s,
-      IndexManifest.readAppendOnlyEpochs(s, path, "data", IndexManifest.Layout, asOf),
-      path, asOf)
-      .drop("day", "z")
-  }
+      asOf: Option[Long] = None): DataFrame =
+    StoredIndex.Layout.resolved(s, path, asOf).drop("day", "z")
 
   // ---------------------------------------------------------------------
   // THE CATALOG SERVED FROM THE STORED TABLE — the round-15 layout tier
@@ -746,12 +684,12 @@ object LayoutOps {
     val metaRows = full.map(_.getLong(5)).sum
     val scanned =
       if (rest.isEmpty) 0L
-      else resolveDels(s,
+      else StoredIndex.Layout.resolve(s, path,
         // basePath recovers the epoch partition column — the demoted
         // files' rows resolve under the same precedence as any read
         s.read.option("basePath", s"$path/data")
           .parquet(rest.map(_.getString(0)): _*),
-        path, asOf)
+        asOf)
         .filter($"user_id".between(uLo, uHi) && $"day".between(dLo, dHi))
         .count()
     (metaRows, scanned, full.length.toLong)

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.sources.Tables
+import graft.sources.{StoredIndex, Tables}
 
 /** Search / retrieval over the corpus: inverted-index boolean search,
   * TF-IDF ranking, and blocked fuzzy entity resolution. These are the
@@ -486,33 +486,21 @@ object SearchOps {
     },
   )
 
+  /** The resolved stored postings (tombstoned documents removed under
+    * epoch precedence, [[deleteFromPostingsIndex]]). Bucket filters
+    * applied by callers still push below the tombstone join to the
+    * parquet scan (partition pruning intact).
+    */
+  private[graft] def storedPostings(s: SparkSession, path: String,
+      asOf: Option[Long] = None): DataFrame =
+    StoredIndex.Postings.resolved(s, path, asOf)
+
   /** Proximity top-k against the STORED index — the second query class
     * the positional postings pay for: two bucket-pruned position lists
     * joined on doc_id, same near_tf aggregate as [[proximitySearch]]
     * (spec-pinned parity; stored positions are 0-based, the inline scan
     * 1-based — distances are base-invariant).
     */
-  /** The resolved stored postings: the committed epoch window minus
-    * tombstoned documents ([[deleteFromPostingsIndex]]) under epoch
-    * precedence — a tombstone removes only posting rows appended in
-    * EARLIER epochs, so delete-then-reindex resolves to the new
-    * postings. Bucket filters applied by callers still push below the
-    * tombstone join to the parquet scan (partition pruning intact).
-    */
-  private[graft] def storedPostings(s: SparkSession, path: String,
-      asOf: Option[Long] = None): DataFrame = {
-    import graft.sources.IndexManifest
-    import s.implicits._
-    val posts = IndexManifest.readAppendOnlyEpochs(
-      s, path, "postings", IndexManifest.Postings, asOf)
-    val dels = IndexManifest.readAppendOnlyEpochs(
-      s, path, "dels", IndexManifest.Postings, asOf)
-      .groupBy($"doc_id").agg(max($"epoch").as("del_epoch"))
-    posts.join(dels, Seq("doc_id"), "left")
-      .filter($"del_epoch".isNull || $"epoch" > $"del_epoch")
-      .drop("epoch", "del_epoch")
-  }
-
   def proximitySearchFromIndex(
       s: SparkSession, path: String, t1: String, t2: String, k: Int,
       slop: Int = proxSlop): DataFrame = {
@@ -729,14 +717,11 @@ object SearchOps {
     // at or above an exchange — sharing one corrupts results under AQE
     // (ProfRace3: shared-instance writes diverge, per-task copies are
     // clean over 40 trials; eager-checkpointed ExistingRDD frames are
-    // exempt, having no exchange to share).
-    graft.sources.Overlap.run(
-      "postings" -> { () =>
-        positionalPostings(docsDf)
-          .repartition($"bucket")
-          .write.mode("overwrite").partitionBy("bucket")
-          .parquet(IndexManifest.epochDir(path, "postings", 0L))
-      },
+    // exempt, having no exchange to share). The empty tombstone epoch
+    // joins them from the declaration.
+    StoredIndex.Postings.build(s, path)(
+      "postings" -> (() =>
+        StoredIndex.Postings.writeMain(positionalPostings(docsDf), path, 0L)),
       "terms" -> { () =>
         positionalPostings(docsDf)
           .groupBy($"t").agg(count(lit(1)).as("df"))
@@ -749,13 +734,7 @@ object SearchOps {
             coalesce(sum(size(TextOps.toks).cast("long")), lit(0L)).as("total_tokens"))
           .coalesce(1)
           .write.mode("overwrite").parquet(IndexManifest.epochDir(path, "corpus", 0L))
-      },
-      // tombstones start empty, schema-carrying (the BQ-index pattern)
-      "dels" -> { () =>
-        Seq.empty[Long].toDF("doc_id").write.mode("overwrite")
-          .parquet(IndexManifest.epochDir(path, "dels", 0L))
       })
-    IndexManifest.commit(path, 0L, fmt = graft.sources.IndexManifest.Postings)
   }
 
   /** Stage (but do NOT commit) epoch `e` of a postings append — the
@@ -776,12 +755,7 @@ object SearchOps {
     // committed epoch e-1 components) — independent under one flip,
     // overlapped (guide §2.6)
     graft.sources.Overlap.run(
-      "postings" -> { () =>
-        postings
-          .repartition($"bucket")
-          .write.mode("overwrite").partitionBy("bucket")
-          .parquet(IndexManifest.epochDir(path, "postings", e))
-      },
+      "postings" -> (() => StoredIndex.Postings.writeMain(postings, path, e)),
       "terms" -> { () =>
         IndexManifest.readRewrite(s, path, "terms", IndexManifest.Postings)
           .join(postings.groupBy($"t").agg(count(lit(1)).as("df_add")), Seq("t"), "full_outer")
@@ -822,53 +796,19 @@ object SearchOps {
     * an append that already COMMITTED folds the same delta in twice.
     * The caller's ingest ledger must not re-feed committed batches.
     */
-  def appendPostingsIndex(newDocs: DataFrame, path: String): Unit = {
-    import graft.sources.IndexManifest
-    val e = IndexManifest.committedEpoch(path, IndexManifest.Postings) + 1L
-    stagePostingsAppend(newDocs, path, e)
-    IndexManifest.advance(path, e, IndexManifest.Postings)
-  }
+  def appendPostingsIndex(newDocs: DataFrame, path: String): Unit =
+    StoredIndex.Postings.nextEpoch(path)(stagePostingsAppend(newDocs, path, _))
 
   /** Fold the accreted posting epochs into one bucket-partitioned
     * directory and raise the window floor (terms/corpus copied
     * forward). After N daily appends each bucket holds N small files
     * per epoch level; compaction restores the one-directory-per-bucket
-    * layout searches prune into. NOT the generic layout-only
-    * compactor: the fold writes the RESOLVED postings (window minus
-    * tombstones) plus an empty tombstone epoch, so deletions become
-    * physical here — folding postings and dels verbatim into one
-    * shared epoch would break the epoch-precedence rule for
-    * reindexed-after-delete docs (the BQ compactor's argument).
+    * layout searches prune into. The fold writes the RESOLVED postings
+    * plus an empty tombstone epoch, so deletions become physical here
+    * ([[graft.sources.StoredIndex.compact]]).
     */
-  def compactPostingsIndex(s: SparkSession, path: String): Unit = {
-    import graft.sources.IndexManifest
-    import s.implicits._
-    val st = IndexManifest.committedState(path, IndexManifest.Postings)
-    val e = st.epoch + 1L
-    // the four fold writes are independent under one commit (§2.6)
-    graft.sources.Overlap.run(
-      Seq(
-        "postings" -> { () =>
-          storedPostings(s, path)
-            .repartition($"bucket")
-            .write.mode("overwrite").partitionBy("bucket")
-            .parquet(IndexManifest.epochDir(path, "postings", e))
-        },
-        "dels" -> { () =>
-          Seq.empty[Long].toDF("doc_id").write.mode("overwrite")
-            .parquet(IndexManifest.epochDir(path, "dels", e))
-        }) ++
-        Seq("terms", "corpus").map(comp => comp -> { () =>
-          IndexManifest.readRewrite(s, path, comp, IndexManifest.Postings)
-            .write.mode("overwrite").parquet(IndexManifest.epochDir(path, comp, e))
-        }): _*)
-    val st2 = IndexManifest.committedState(path, IndexManifest.Postings)
-    if (st2.epoch != st.epoch)
-      throw new java.util.ConcurrentModificationException(
-        s"index at $path: compaction staged epoch $e over committed ${st.epoch} " +
-          s"but found ${st2.epoch} at commit time - re-run (single-writer contract)")
-    IndexManifest.commit(path, e, baseEpoch = e, IndexManifest.Postings)
-  }
+  def compactPostingsIndex(s: SparkSession, path: String): Unit =
+    StoredIndex.Postings.compact(s, path)
 
   /** Stage (but do NOT commit) a de-index epoch — for the kill drill. */
   private[queries] def stagePostingsDelete(ids: DataFrame, path: String, e: Long): Unit = {
@@ -923,13 +863,8 @@ object SearchOps {
     * ledger discipline as the appenders' replay hazard). Crash-atomic
     * via the manifest: stage first, flip last.
     */
-  def deleteFromPostingsIndex(ids: DataFrame, path: String): Unit = {
-    import graft.sources.IndexManifest
-    val s = ids.sparkSession
-    val e = IndexManifest.committedEpoch(path, IndexManifest.Postings) + 1L
-    stagePostingsDelete(ids, path, e)
-    IndexManifest.advance(path, e, IndexManifest.Postings)
-  }
+  def deleteFromPostingsIndex(ids: DataFrame, path: String): Unit =
+    StoredIndex.Postings.nextEpoch(path)(stagePostingsDelete(ids, path, _))
 
   /** TF-IDF top-k against the STORED index — same ranking contract as
     * [[tfidfSearch]] (the parity spec pins it), but the posting scan is

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.sources.Tables
+import graft.sources.{StoredIndex, Tables}
 
 /** Text-analysis + deduplication query pack over the `documents` table —
   * the training-data-pipeline operators (token counting, language ID,
@@ -2316,16 +2316,18 @@ object TextOps {
     val s = snap.sparkSession
     import s.implicits._
     val v = scd2Versions(snap, day)
-    v.write.mode("overwrite").parquet(IndexManifest.epochDir(path, "latest", 0L))
-    v.filter(lit(false)) // closed starts empty, schema-carrying
-      .write.mode("overwrite").parquet(IndexManifest.epochDir(path, "closed", 0L))
-    Seq(day).toDF("last_day")
-      .coalesce(1)
-      .write.mode("overwrite").parquet(IndexManifest.epochDir(path, "meta", 0L))
-    // purge tombstones start empty, schema-carrying
-    Seq.empty[Long].toDF("doc_id")
-      .write.mode("overwrite").parquet(IndexManifest.epochDir(path, "dels", 0L))
-    IndexManifest.commit(path, 0L, fmt = IndexManifest.Scd2)
+    // latest and closed share `v`'s plan: the declaration runs Scd2's
+    // writes in order, never concurrently (then the empty tombstones)
+    StoredIndex.Scd2.build(s, path)(
+      "latest" -> (() =>
+        v.write.mode("overwrite").parquet(IndexManifest.epochDir(path, "latest", 0L))),
+      "closed" -> (() =>
+        v.filter(lit(false)) // closed starts empty, schema-carrying
+          .write.mode("overwrite").parquet(IndexManifest.epochDir(path, "closed", 0L))),
+      "meta" -> (() =>
+        Seq(day).toDF("last_day")
+          .coalesce(1)
+          .write.mode("overwrite").parquet(IndexManifest.epochDir(path, "meta", 0L))))
   }
 
   /** Stage (but do NOT commit) epoch `e` of an SCD2 fold — exposed for
@@ -2385,53 +2387,16 @@ object TextOps {
         s"appendScd2Snapshot(day=$day) but the stored table already folded " +
           s"day $lastDay - replaying a committed append (or misordered ingest) " +
           "would double-count; snapshots fold in strictly increasing day order")
-    val e = IndexManifest.committedEpoch(path, IndexManifest.Scd2) + 1L
-    stageScd2Append(snap, day, path, e)
-    IndexManifest.advance(path, e, IndexManifest.Scd2)
+    StoredIndex.Scd2.nextEpoch(path)(stageScd2Append(snap, day, path, _))
   }
 
   /** Fold the accreted closed-row epochs into one directory and raise
     * the window floor (latest/meta copied forward) — the SCD2 member of
-    * the compaction family.
+    * the compaction family. The fold writes the RESOLVED closed rows
+    * (window minus purge tombstones), so erasure becomes physical here.
     */
-  def compactScd2(s: SparkSession, path: String): Unit = {
-    import graft.sources.IndexManifest
-    import s.implicits._
-    val st = IndexManifest.committedState(path, IndexManifest.Scd2)
-    val e = st.epoch + 1L
-    // RESOLVED closed rows (window minus purge tombstones) — erasure
-    // becomes physical here; the verbatim fold would collapse the
-    // epoch-precedence rule for re-added docs (the BQ compactor's
-    // argument)
-    resolvedClosed(s, path).write.mode("overwrite")
-      .parquet(IndexManifest.epochDir(path, "closed", e))
-    Seq("latest", "meta").foreach { comp =>
-      IndexManifest.readRewrite(s, path, comp, IndexManifest.Scd2)
-        .write.mode("overwrite").parquet(IndexManifest.epochDir(path, comp, e))
-    }
-    Seq.empty[Long].toDF("doc_id").write.mode("overwrite")
-      .parquet(IndexManifest.epochDir(path, "dels", e))
-    val st2 = IndexManifest.committedState(path, IndexManifest.Scd2)
-    if (st2.epoch != st.epoch)
-      throw new java.util.ConcurrentModificationException(
-        s"index at $path: compaction staged epoch $e over committed ${st.epoch} " +
-          s"but found ${st2.epoch} at commit time - re-run (single-writer contract)")
-    IndexManifest.commit(path, e, baseEpoch = e, IndexManifest.Scd2)
-  }
-
-  /** Closed version rows minus purge tombstones under epoch precedence
-    * (a purge removes only rows appended in earlier epochs, so a doc
-    * RE-ADDED by a later snapshot keeps its post-purge history).
-    */
-  private def resolvedClosed(s: SparkSession, path: String): DataFrame = {
-    import graft.sources.IndexManifest
-    val closed = IndexManifest.readAppendOnlyEpochs(s, path, "closed", IndexManifest.Scd2)
-    val dels = IndexManifest.readAppendOnlyEpochs(s, path, "dels", IndexManifest.Scd2)
-      .groupBy(col("doc_id")).agg(max(col("epoch")).as("del_epoch"))
-    closed.join(dels, Seq("doc_id"), "left")
-      .filter(col("del_epoch").isNull || col("epoch") > col("del_epoch"))
-      .drop("epoch", "del_epoch")
-  }
+  def compactScd2(s: SparkSession, path: String): Unit =
+    StoredIndex.Scd2.compact(s, path)
 
   /** Stage (but do NOT commit) a purge epoch — for the kill drill. */
   private[queries] def stageScd2Purge(ids: DataFrame, path: String, e: Long): Unit = {
@@ -2454,18 +2419,15 @@ object TextOps {
     * different contract from daily closure: closure records that a doc
     * LEFT the corpus (its history stays queryable); purge erases that
     * the doc was ever there. Open rows leave via the latest rewrite,
-    * closed history via a tombstone epoch ([[resolvedClosed]]); a doc
+    * closed history via a tombstone epoch (resolved under epoch
+    * precedence by [[graft.sources.StoredIndex.resolved]]); a doc
     * re-added by a LATER snapshot starts a fresh version-1 history that
     * the old tombstone cannot touch (epoch precedence), and
     * [[compactScd2]] makes the erasure physical. Crash-atomic via the
     * manifest; same single-writer/replay discipline as the appenders.
     */
-  def purgeScd2Docs(ids: DataFrame, path: String): Unit = {
-    import graft.sources.IndexManifest
-    val e = IndexManifest.committedEpoch(path, IndexManifest.Scd2) + 1L
-    stageScd2Purge(ids, path, e)
-    IndexManifest.advance(path, e, IndexManifest.Scd2)
-  }
+  def purgeScd2Docs(ids: DataFrame, path: String): Unit =
+    StoredIndex.Scd2.nextEpoch(path)(stageScd2Purge(ids, path, _))
 
   /** The full SCD2 history from the stored table — closed ∪ latest with
     * scd2On's exact output contract (is_current = valid_to == last_day),
@@ -2474,7 +2436,7 @@ object TextOps {
   def readScd2(s: SparkSession, path: String): DataFrame = {
     import graft.sources.IndexManifest
     val lastDay = IndexManifest.readRewrite(s, path, "meta", IndexManifest.Scd2).first().getLong(0)
-    resolvedClosed(s, path)
+    StoredIndex.Scd2.resolved(s, path)
       .unionByName(IndexManifest.readRewrite(s, path, "latest", IndexManifest.Scd2))
       .select(col("doc_id"), col("version"), col("content_hash"),
         col("valid_from"), col("valid_to"),
@@ -2538,7 +2500,6 @@ object TextOps {
   def writeLshIndex(base: DataFrame, path: String): Unit = {
     import graft.sources.IndexManifest
     val s0 = base.sparkSession
-    import s0.implicits._
     // independent epoch-0 components under one commit, overlapped
     // (guide §2.6); the shingle subtree recomputes concurrently in both
     // band writes — the barrier-free trade (checkpoint rule, ProfTok).
@@ -2546,7 +2507,7 @@ object TextOps {
     // share a live plan instance at or above an exchange (the ProfRace3
     // AQE corruption — see SearchOps.writePostingsIndex).
     def rows() = minhashBandRows(shinglesOfDf(base.select(col("doc_id"), col("text"))))
-    graft.sources.Overlap.run(
+    StoredIndex.Lsh.build(s0, path)(
       "bands" -> (() =>
         rows().write.mode("overwrite").parquet(IndexManifest.epochDir(path, "bands", 0L))),
       "bucket_counts" -> { () =>
@@ -2554,27 +2515,14 @@ object TextOps {
           .agg(count(lit(1)).as("n_base"))
           .write.mode("overwrite")
           .parquet(IndexManifest.epochDir(path, "bucket_counts", 0L))
-      },
-      // tombstones start empty, schema-carrying (the BQ-index pattern)
-      "dels" -> { () =>
-        Seq.empty[Long].toDF("doc_id").write.mode("overwrite")
-          .parquet(IndexManifest.epochDir(path, "dels", 0L))
       })
-    IndexManifest.commit(path, 0L, fmt = IndexManifest.Lsh)
   }
 
   /** The resolved stored band rows: committed window minus tombstoned
     * docs under epoch precedence ([[deleteFromLshIndex]]).
     */
-  private[graft] def storedLshBands(s: SparkSession, path: String): DataFrame = {
-    import graft.sources.IndexManifest
-    val bands = IndexManifest.readAppendOnlyEpochs(s, path, "bands", IndexManifest.Lsh)
-    val dels = IndexManifest.readAppendOnlyEpochs(s, path, "dels", IndexManifest.Lsh)
-      .groupBy(col("doc_id")).agg(max(col("epoch")).as("del_epoch"))
-    bands.join(dels, Seq("doc_id"), "left")
-      .filter(col("del_epoch").isNull || col("epoch") > col("del_epoch"))
-      .drop("epoch", "del_epoch")
-  }
+  private[graft] def storedLshBands(s: SparkSession, path: String): DataFrame =
+    StoredIndex.Lsh.resolved(s, path)
 
   /** Stage (but do NOT commit) a forget epoch — for the kill drill. */
   private[queries] def stageLshDelete(ids: DataFrame, path: String, e: Long): Unit = {
@@ -2613,12 +2561,8 @@ object TextOps {
     * forgetting an unknown or already-forgotten id double-subtracts
     * the counts (the appenders' ledger discipline).
     */
-  def deleteFromLshIndex(ids: DataFrame, path: String): Unit = {
-    import graft.sources.IndexManifest
-    val e = IndexManifest.committedEpoch(path, IndexManifest.Lsh) + 1L
-    stageLshDelete(ids, path, e)
-    IndexManifest.advance(path, e, IndexManifest.Lsh)
-  }
+  def deleteFromLshIndex(ids: DataFrame, path: String): Unit =
+    StoredIndex.Lsh.nextEpoch(path)(stageLshDelete(ids, path, _))
 
   /** Stage (but do NOT commit) epoch `e` of an LSH append: the delta's
     * band rows land under `bands/epoch=e`, and a FULL merged copy of
@@ -2671,48 +2615,17 @@ object TextOps {
     * an append that already COMMITTED folds the same delta in twice.
     * The caller's ingest ledger must not re-feed committed batches.
     */
-  def appendLshIndex(keptDelta: DataFrame, path: String): Unit = {
-    import graft.sources.IndexManifest
-    val e = IndexManifest.committedEpoch(path, IndexManifest.Lsh) + 1L
-    stageLshAppend(keptDelta, path, e)
-    IndexManifest.advance(path, e, IndexManifest.Lsh)
-  }
+  def appendLshIndex(keptDelta: DataFrame, path: String): Unit =
+    StoredIndex.Lsh.nextEpoch(path)(stageLshAppend(keptDelta, path, _))
 
   /** Fold the accreted band-row epochs into one fresh directory and
     * raise the manifest's window floor (counts copied forward) — run
-    * after N appends to stop small-file/directory accretion. Reader
+    * after N appends to stop small-file/directory accretion. The fold
+    * writes the RESOLVED band rows, so forgets become physical. Reader
     * equality is the manifest's contract; IndexManifestSpec pins it.
     */
-  def compactLshIndex(s: SparkSession, path: String): Unit = {
-    import graft.sources.IndexManifest
-    import s.implicits._
-    val st = IndexManifest.committedState(path, IndexManifest.Lsh)
-    val e = st.epoch + 1L
-    // the RESOLVED band rows (window minus tombstones) — deletions
-    // become physical here; folding bands and dels verbatim into one
-    // shared epoch would break the epoch-precedence rule (the BQ
-    // compactor's argument). The three fold writes are independent
-    // under the one commit — overlapped (guide §2.6).
-    graft.sources.Overlap.run(
-      "bands" -> (() =>
-        storedLshBands(s, path).write.mode("overwrite")
-          .parquet(IndexManifest.epochDir(path, "bands", e))),
-      "bucket_counts" -> { () =>
-        IndexManifest.readRewrite(s, path, "bucket_counts", IndexManifest.Lsh)
-          .write.mode("overwrite")
-          .parquet(IndexManifest.epochDir(path, "bucket_counts", e))
-      },
-      "dels" -> { () =>
-        Seq.empty[Long].toDF("doc_id").write.mode("overwrite")
-          .parquet(IndexManifest.epochDir(path, "dels", e))
-      })
-    val st2 = IndexManifest.committedState(path, IndexManifest.Lsh)
-    if (st2.epoch != st.epoch)
-      throw new java.util.ConcurrentModificationException(
-        s"index at $path: compaction staged epoch $e over committed ${st.epoch} " +
-          s"but found ${st2.epoch} at commit time - re-run (single-writer contract)")
-    IndexManifest.commit(path, e, baseEpoch = e, IndexManifest.Lsh)
-  }
+  def compactLshIndex(s: SparkSession, path: String): Unit =
+    StoredIndex.Lsh.compact(s, path)
 
   // ---------------------------------------------------------------------
   // Stored shingle-df index — the day-2 form of t_shingle_novelty:
@@ -2741,26 +2654,17 @@ object TextOps {
       .withColumn("bucket", pmod(h60(col("sh")), lit(64L)))
 
   /** Build + persist the shingle-df index from a base corpus. */
-  def writeShingleIndex(base: DataFrame, path: String): Unit = {
-    import graft.sources.IndexManifest
-    shingleCounts(base)
-      .repartition(col("bucket"))
-      .write.mode("overwrite").partitionBy("bucket")
-      .parquet(IndexManifest.epochDir(path, "shingle_counts", 0L))
-    IndexManifest.commit(path, 0L, fmt = IndexManifest.Shingle)
-  }
+  def writeShingleIndex(base: DataFrame, path: String): Unit =
+    StoredIndex.Shingle.build(base.sparkSession, path)(
+      "shingle_counts" -> (() =>
+        StoredIndex.Shingle.writeMain(shingleCounts(base), path, 0L)))
 
   /** Stage (but do NOT commit) epoch `e` of a shingle-count append —
     * exposed for the atomicity drill. Additive counts: the stage is
     * just the DELTA's own counts in e's directory, no merge read.
     */
-  private[graft] def stageShingleAppend(delta: DataFrame, path: String, e: Long): Unit = {
-    import graft.sources.IndexManifest
-    shingleCounts(delta)
-      .repartition(col("bucket"))
-      .write.mode("overwrite").partitionBy("bucket")
-      .parquet(IndexManifest.epochDir(path, "shingle_counts", e))
-  }
+  private[graft] def stageShingleAppend(delta: DataFrame, path: String, e: Long): Unit =
+    StoredIndex.Shingle.writeMain(shingleCounts(delta), path, e)
 
   /** Fold new docs' shingle counts into the stored index (additive —
     * caller contract as the other appenders: fold each doc once).
@@ -2769,12 +2673,8 @@ object TextOps {
     * an append that already COMMITTED folds the same delta in twice.
     * The caller's ingest ledger must not re-feed committed batches.
     */
-  def appendShingleIndex(delta: DataFrame, path: String): Unit = {
-    import graft.sources.IndexManifest
-    val e = IndexManifest.committedEpoch(path, IndexManifest.Shingle) + 1L
-    stageShingleAppend(delta, path, e)
-    IndexManifest.advance(path, e, IndexManifest.Shingle)
-  }
+  def appendShingleIndex(delta: DataFrame, path: String): Unit =
+    StoredIndex.Shingle.nextEpoch(path)(stageShingleAppend(delta, path, _))
 
   /** Forget documents' shingle mass — the novelty-screen member of the
     * forget family, and the cheapest of all of them: counts are
@@ -2789,35 +2689,25 @@ object TextOps {
     * the same doc twice) drives counts negative — the appenders'
     * ledger discipline.
     */
-  def forgetShingleDocs(docs: DataFrame, path: String): Unit = {
-    import graft.sources.IndexManifest
-    val e = IndexManifest.committedEpoch(path, IndexManifest.Shingle) + 1L
-    shingleCounts(docs)
-      .withColumn("n", -col("n"))
-      .repartition(col("bucket"))
-      .write.mode("overwrite").partitionBy("bucket")
-      .parquet(IndexManifest.epochDir(path, "shingle_counts", e))
-    IndexManifest.advance(path, e, IndexManifest.Shingle)
-  }
+  def forgetShingleDocs(docs: DataFrame, path: String): Unit =
+    StoredIndex.Shingle.nextEpoch(path)(
+      StoredIndex.Shingle.writeMain(shingleCounts(docs).withColumn("n", -col("n")), path, _))
 
   /** Re-sum the committed epoch window into one directory and raise the
     * window floor — the summing compactor (the generic layout-only
     * compact would keep duplicate shingle rows across folded epochs;
     * correct for a summing reader, but this restores one-row-per-
     * shingle). Forgotten shingles (summed df <= 0) drop out of the fold
-    * physically.
+    * physically. The declaration's guarded commit refuses to raise the
+    * floor over an append that landed while the fold ran.
     */
-  def compactShingleIndex(s: SparkSession, path: String): Unit = {
-    import graft.sources.IndexManifest
-    val e = IndexManifest.committedEpoch(path, IndexManifest.Shingle) + 1L
-    storedShingleDf(s, path)
-      .withColumnRenamed("sdf", "n") // back to the component schema
-      .withColumn("bucket", pmod(h60(col("sh")), lit(64L)))
-      .repartition(col("bucket"))
-      .write.mode("overwrite").partitionBy("bucket")
-      .parquet(IndexManifest.epochDir(path, "shingle_counts", e))
-    IndexManifest.commit(path, e, baseEpoch = e, fmt = IndexManifest.Shingle)
-  }
+  def compactShingleIndex(s: SparkSession, path: String): Unit =
+    StoredIndex.Shingle.compact(s, path, fold = Some(e =>
+      StoredIndex.Shingle.writeMain(
+        storedShingleDf(s, path)
+          .withColumnRenamed("sdf", "n") // back to the component schema
+          .withColumn("bucket", pmod(h60(col("sh")), lit(64L))),
+        path, e)))
 
   /** The summed (sh, sdf) view of the committed window. Shingles whose
     * sum reached 0 (forgotten) are dropped — a 0-count row would still

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.sources.Tables
+import graft.sources.{StoredIndex, Tables}
 
 /** Embedding / similarity-search query pack over the `embeddings` table
   * (64-dim float vectors, int label) — the ANN / near-dup operators a
@@ -2733,15 +2733,15 @@ object VectorOps {
     s"$path/centroids/gen=$floor"
 
   def writeIvfPqIndex(emb: DataFrame, path: String): Unit = {
-    import graft.sources.IndexManifest
     val s = emb.sparkSession
     import s.implicits._
     // public entry point: callers may not have gone through vecs()'s
     // session registration (the replica sweep caught exactly that)
     graft.functions.GraftFunctions.registerDotD(s)
     // independent epoch-0 components under one commit, overlapped
-    // (guide §2.6 — four small writes whose cost is the job floor)
-    graft.sources.Overlap.run(
+    // (guide §2.6 — four small writes whose cost is the job floor, the
+    // empty tombstone epoch among them)
+    StoredIndex.IvfPq.build(s, path)(
       "centroids" -> { () =>
         emb.filter($"vec_id" < nCells)
           .select($"vec_id".as("cell"), $"embedding".as("c_emb"))
@@ -2753,34 +2753,10 @@ object VectorOps {
           .coalesce(1)
           .write.mode("overwrite").parquet(s"$path/codewords")
       },
-      "codes" -> { () =>
-        pqCodesOn(emb)
-          .join(ivfCells(emb).select($"vec_id", $"cell"), Seq("vec_id"))
-          .repartition($"cell")
-          .write.mode("overwrite").partitionBy("cell")
-          .parquet(IndexManifest.epochDir(path, "codes", 0L))
-      },
-      // forget tombstones start empty, schema-carrying
-      "dels" -> { () =>
-        Seq.empty[Long].toDF("vec_id").write.mode("overwrite")
-          .parquet(IndexManifest.epochDir(path, "dels", 0L))
-      })
-    IndexManifest.commit(path, 0L, fmt = IndexManifest.IvfPq)
-  }
-
-  /** The resolved stored codes: committed window minus forget
-    * tombstones under epoch precedence ([[deleteFromIvfPqIndex]]).
-    * Cell partition pruning pushes below the tombstone join.
-    */
-  private[queries] def storedIvfPqCodes(s: SparkSession, path: String,
-      asOf: Option[Long] = None): DataFrame = {
-    import graft.sources.IndexManifest
-    val codes = IndexManifest.readAppendOnlyEpochs(s, path, "codes", IndexManifest.IvfPq, asOf)
-    val dels = IndexManifest.readAppendOnlyEpochs(s, path, "dels", IndexManifest.IvfPq, asOf)
-      .groupBy(col("vec_id")).agg(max(col("epoch")).as("del_epoch"))
-    codes.join(dels, Seq("vec_id"), "left")
-      .filter(col("del_epoch").isNull || col("epoch") > col("del_epoch"))
-      .drop("epoch", "del_epoch")
+      "codes" -> (() =>
+        StoredIndex.IvfPq.writeMain(
+          pqCodesOn(emb).join(ivfCells(emb).select($"vec_id", $"cell"), Seq("vec_id")),
+          path, 0L)))
   }
 
   /** Forget vectors from the stored IVF-PQ index — the ANN-tier member
@@ -2792,14 +2768,8 @@ object VectorOps {
     * untouched exactly as a rebuild-with-frozen-codebooks would.
     * Caller contract as the siblings: ids are live index members.
     */
-  def deleteFromIvfPqIndex(ids: DataFrame, path: String): Unit = {
-    import graft.sources.IndexManifest
-    val e = IndexManifest.committedEpoch(path, IndexManifest.IvfPq) + 1L
-    ids.select(col("vec_id").cast("long")).distinct()
-      .write.mode("overwrite")
-      .parquet(IndexManifest.epochDir(path, "dels", e))
-    IndexManifest.advance(path, e, IndexManifest.IvfPq)
-  }
+  def deleteFromIvfPqIndex(ids: DataFrame, path: String): Unit =
+    StoredIndex.IvfPq.forget(ids, path)
 
   /** Fold new vectors into the stored IVF-PQ index — the vector-side
     * sibling of `TextOps.appendLshIndex`: arrivals are assigned and
@@ -2820,49 +2790,21 @@ object VectorOps {
     * an append that already COMMITTED folds the same delta in twice.
     * The caller's ingest ledger must not re-feed committed batches.
     */
-  def appendIvfPqIndex(newVecs: DataFrame, path: String): Unit = {
-    import graft.sources.IndexManifest
-    val e = IndexManifest.committedEpoch(path, IndexManifest.IvfPq) + 1L
-    stageIvfPqAppend(newVecs, path, e)
-    IndexManifest.advance(path, e, IndexManifest.IvfPq)
-  }
+  def appendIvfPqIndex(newVecs: DataFrame, path: String): Unit =
+    StoredIndex.IvfPq.nextEpoch(path)(stageIvfPqAppend(newVecs, path, _))
 
   /** Fold the accreted code epochs into one cell-partitioned directory
-    * and raise the window floor (centroids/codewords are immutable
-    * plain directories — untouched).
+    * of RESOLVED codes (forgets become physical) and raise the window
+    * floor; the centroid generation moves to the new floor, codewords
+    * are an immutable plain directory — untouched.
     */
-  def compactIvfPqIndex(s: SparkSession, path: String): Unit = {
-    import graft.sources.IndexManifest
-    import s.implicits._
-    val st = IndexManifest.committedState(path, IndexManifest.IvfPq)
-    val e = st.epoch + 1L
-    // RESOLVED codes (window minus tombstones) — forgets become
-    // physical here; the verbatim fold would collapse epoch precedence
-    // for re-added vectors (the BQ compactor's argument). The three
-    // fold writes are independent under one commit (§2.6).
-    graft.sources.Overlap.run(
-      "codes" -> { () =>
-        storedIvfPqCodes(s, path)
-          .repartition($"cell")
-          .write.mode("overwrite").partitionBy("cell")
-          .parquet(IndexManifest.epochDir(path, "codes", e))
-      },
-      "dels" -> { () =>
-        Seq.empty[Long].toDF("vec_id").write.mode("overwrite")
-          .parquet(IndexManifest.epochDir(path, "dels", e))
-      },
+  def compactIvfPqIndex(s: SparkSession, path: String): Unit =
+    StoredIndex.IvfPq.compact(s, path, extra = (st, e) => Seq(
       // carry the centroid generation to the new floor (gen == baseEpoch
       // invariant); 16 rows, trivial copy
       "centroids" -> (() =>
         s.read.parquet(centroidsDir(path, st.baseEpoch))
-          .coalesce(1).write.mode("overwrite").parquet(centroidsDir(path, e))))
-    val st2 = IndexManifest.committedState(path, IndexManifest.IvfPq)
-    if (st2.epoch != st.epoch)
-      throw new java.util.ConcurrentModificationException(
-        s"index at $path: compaction staged epoch $e over committed ${st.epoch} " +
-          s"but found ${st2.epoch} at commit time - re-run (single-writer contract)")
-    IndexManifest.commit(path, e, baseEpoch = e, IndexManifest.IvfPq)
-  }
+          .coalesce(1).write.mode("overwrite").parquet(centroidsDir(path, e)))))
 
   /** Stage (but do NOT commit) epoch `e` of an IVF-PQ append — exposed
     * for the atomicity spec.
@@ -2930,12 +2872,10 @@ object VectorOps {
     * dimension is constant (n_hi = 0) are reported but left unsplit.
     */
   def splitIvfPqCells(emb: DataFrame, path: String): DataFrame = {
-    import graft.sources.IndexManifest
     val s = emb.sparkSession
     import s.implicits._
-    val st = IndexManifest.committedState(path, IndexManifest.IvfPq)
-    val e = st.epoch + 1L
-    val codes = storedIvfPqCodes(s, path).cache()
+    val st = StoredIndex.IvfPq.state(path)
+    val codes = StoredIndex.IvfPq.resolved(s, path).cache()
     // the cell partition column reads back as INT when values fit —
     // normalize to the centroid table's LONG for every derived frame
     val cells = codes.filter($"sub" === 0L)
@@ -2963,7 +2903,9 @@ object VectorOps {
       .map(r => (r.getLong(0), r.getLong(3))).sortBy(_._1)
       .zipWithIndex
       .map { case ((cell, mid2), i) => (cell, mid2, maxCell + 1L + i) }
-    if (splits.nonEmpty) {
+    // compaction-class: staged under the next epoch, committed with the
+    // declaration's guarded floor raise
+    if (splits.nonEmpty) StoredIndex.IvfPq.rebase(path, st) { e =>
       val splitDf = plan.filter($"n_hi" > 0L)
         .join(splits.toSeq.toDF("cell", "mid2_chk", "hi_cell"), Seq("cell"))
         .select($"cell", $"split_dim", $"mid2_micros", $"hi_cell")
@@ -2996,21 +2938,13 @@ object VectorOps {
       // resolved codes with the reassignment applied — compaction-class
       val moved = sides.filter($"new_cell" =!= $"cell")
         .select($"vec_id", $"new_cell")
-      codes
-        .join(moved, Seq("vec_id"), "left")
-        .withColumn("cell", coalesce($"new_cell", $"cell"))
-        .drop("new_cell")
-        .repartition($"cell")
-        .write.mode("overwrite").partitionBy("cell")
-        .parquet(IndexManifest.epochDir(path, "codes", e))
-      Seq.empty[Long].toDF("vec_id").write.mode("overwrite")
-        .parquet(IndexManifest.epochDir(path, "dels", e))
-      val st2 = IndexManifest.committedState(path, IndexManifest.IvfPq)
-      if (st2.epoch != st.epoch)
-        throw new java.util.ConcurrentModificationException(
-          s"index at $path: rebalance staged epoch $e over committed ${st.epoch} " +
-            s"but found ${st2.epoch} at commit time - re-run (single-writer contract)")
-      IndexManifest.commit(path, e, baseEpoch = e, IndexManifest.IvfPq)
+      StoredIndex.IvfPq.writeMain(
+        codes
+          .join(moved, Seq("vec_id"), "left")
+          .withColumn("cell", coalesce($"new_cell", $"cell"))
+          .drop("new_cell"),
+        path, e)
+      StoredIndex.IvfPq.emptyTombstones(s, path, e).foreach(_._2())
     }
     plan.localCheckpoint(true)
     } finally {
@@ -3169,19 +3103,17 @@ object VectorOps {
   )
 
   private[graft] def stageIvfPqAppend(newVecs: DataFrame, path: String, e: Long): Unit = {
-    import graft.sources.IndexManifest
     val s = newVecs.sparkSession
     import s.implicits._
     graft.functions.GraftFunctions.registerDotD(s)
-    val floor = IndexManifest.committedState(path, IndexManifest.IvfPq).baseEpoch
+    val floor = StoredIndex.IvfPq.state(path).baseEpoch
     val cents = s.read.parquet(centroidsDir(path, floor)).collect()
       .map(r => (r.getLong(0), r.getSeq[Float](1).toArray)).toSeq.sortBy(_._1)
     val cw = s.read.parquet(s"$path/codewords")
-    pqCodesWith(newVecs, cw)
-      .join(ivfCellsWith(newVecs, cents).select($"vec_id", $"cell"), Seq("vec_id"))
-      .repartition($"cell")
-      .write.mode("overwrite").partitionBy("cell")
-      .parquet(IndexManifest.epochDir(path, "codes", e))
+    StoredIndex.IvfPq.writeMain(
+      pqCodesWith(newVecs, cw)
+        .join(ivfCellsWith(newVecs, cents).select($"vec_id", $"cell"), Seq("vec_id")),
+      path, e)
   }
 
   /** ADC search against the STORED index: probes and the lookup table
@@ -3205,11 +3137,10 @@ object VectorOps {
       excludeSelf: Boolean = true, keepIds: Option[DataFrame] = None,
       keepPairs: Option[DataFrame] = None): DataFrame = {
     import s.implicits._
-    import graft.sources.IndexManifest
     graft.functions.GraftFunctions.registerDotD(s)
     // the window floor is invariant across every readable as-of epoch,
     // so one generation serves both head and pinned reads
-    val floor = IndexManifest.committedState(path, IndexManifest.IvfPq).baseEpoch
+    val floor = StoredIndex.IvfPq.state(path).baseEpoch
     val cents = s.read.parquet(centroidsDir(path, floor))
     val cw = s.read.parquet(s"$path/codewords")
     val wProbe = Window.partitionBy($"query_id").orderBy($"d2c_micros".asc, $"cell".asc)
@@ -3243,7 +3174,7 @@ object VectorOps {
     // of the filtered PROBED cells — the filter composes with, not
     // bypasses, this family's nProbe recall contract (an eligible id
     // in an unprobed cell stays unreachable, exactly as unfiltered)
-    val pruned = storedIvfPqCodes(s, path, asOf)
+    val pruned = StoredIndex.IvfPq.resolved(s, path, asOf)
       .filter($"cell".isin(probedCells: _*))
     val cand = keepIds.fold(pruned)(keep =>
       pruned.join(keep.select(col("vec_id")), Seq("vec_id"), "left_semi"))
@@ -4289,20 +4220,10 @@ object VectorOps {
   private[graft] val bqRadius = 3L
 
   private[graft] def writeBqIndex(emb: DataFrame, path: String): Unit = {
-    import graft.sources.IndexManifest
-    val s = emb.sparkSession
-    import s.implicits._
-    // two independent epoch-0 components under one commit (guide §2.6)
-    graft.sources.Overlap.run(
-      "words" -> (() =>
-        bqPackedOn(emb).write.mode("overwrite")
-          .parquet(IndexManifest.epochDir(path, "words", 0L))),
-      // tombstones start empty, schema-carrying (the scd2 `closed` pattern)
-      "dels" -> { () =>
-        Seq.empty[Long].toDF("vec_id").write.mode("overwrite")
-          .parquet(IndexManifest.epochDir(path, "dels", 0L))
-      })
-    IndexManifest.commit(path, 0L, fmt = IndexManifest.Bq)
+    // the words and the empty tombstone epoch: independent epoch-0
+    // components under one commit (guide §2.6)
+    StoredIndex.Bq.build(emb.sparkSession, path)(
+      "words" -> (() => StoredIndex.Bq.writeMain(bqPackedOn(emb), path, 0L)))
   }
 
   /** Forget vectors from the stored index — the right-to-be-forgotten
@@ -4317,23 +4238,16 @@ object VectorOps {
     * twice is idempotent — but it bumps the epoch it removes up to,
     * which can swallow a re-append that landed in between).
     */
-  def deleteFromBqIndex(ids: DataFrame, path: String): Unit = {
-    import graft.sources.IndexManifest
-    val e = IndexManifest.committedEpoch(path, IndexManifest.Bq) + 1L
-    stageBqDelete(ids, path, e)
-    IndexManifest.advance(path, e, IndexManifest.Bq)
-  }
+  def deleteFromBqIndex(ids: DataFrame, path: String): Unit =
+    StoredIndex.Bq.nextEpoch(path)(stageBqDelete(ids, path, _))
 
   /** Stage (but do NOT commit) a tombstone epoch — for the kill drill. */
   private[queries] def stageBqDelete(ids: DataFrame, path: String, e: Long): Unit =
-    ids.select(col("vec_id").cast("long")).distinct()
-      .write.mode("overwrite")
-      .parquet(graft.sources.IndexManifest.epochDir(path, "dels", e))
+    StoredIndex.Bq.stageTombstones(ids, path, e)
 
   /** Stage (but do NOT commit) epoch `e` — exposed for the kill drill. */
   private[queries] def stageBqAppend(delta: DataFrame, path: String, e: Long): Unit =
-    bqPackedOn(delta).write.mode("overwrite")
-      .parquet(graft.sources.IndexManifest.epochDir(path, "words", e))
+    StoredIndex.Bq.writeMain(bqPackedOn(delta), path, e)
 
   /** Fold a day's arrivals into the stored words. Crash-atomic via the
     * manifest (stage epoch e, flip last).
@@ -4342,43 +4256,19 @@ object VectorOps {
     * an append that already COMMITTED stores the same words twice and
     * the screen starts flagging the batch against itself.
     */
-  def appendBqIndex(delta: DataFrame, path: String): Unit = {
-    import graft.sources.IndexManifest
-    val e = IndexManifest.committedEpoch(path, IndexManifest.Bq) + 1L
-    stageBqAppend(delta, path, e)
-    IndexManifest.advance(path, e, IndexManifest.Bq)
-  }
+  def appendBqIndex(delta: DataFrame, path: String): Unit =
+    StoredIndex.Bq.nextEpoch(path)(stageBqAppend(delta, path, _))
 
   /** Fold the committed window into one fresh epoch and raise the
-    * floor. NOT the generic layout-only compactor: the fold writes the
-    * RESOLVED view (words minus tombstones) and an empty tombstone
-    * epoch — folding words and dels verbatim into one shared epoch
-    * would break the epoch-precedence rule (a re-appended id's word
-    * would land in the same epoch as its older tombstone and be
-    * wrongly removed). Deletes become physical here; the superseded
-    * epochs are vacuum's to collect.
+    * floor. The fold writes the RESOLVED view (words minus tombstones)
+    * and an empty tombstone epoch — folding words and dels verbatim
+    * into one shared epoch would break the epoch-precedence rule (a
+    * re-appended id's word would land in the same epoch as its older
+    * tombstone and be wrongly removed). Deletes become physical here;
+    * the superseded epochs are vacuum's to collect.
     */
-  def compactBqIndex(s: SparkSession, path: String): Unit = {
-    import graft.sources.IndexManifest
-    import s.implicits._
-    val st = IndexManifest.committedState(path, IndexManifest.Bq)
-    val e = st.epoch + 1L
-    // the two fold writes are independent under one commit (§2.6)
-    graft.sources.Overlap.run(
-      "words" -> (() =>
-        storedBqWords(s, path).write.mode("overwrite")
-          .parquet(IndexManifest.epochDir(path, "words", e))),
-      "dels" -> { () =>
-        Seq.empty[Long].toDF("vec_id").write.mode("overwrite")
-          .parquet(IndexManifest.epochDir(path, "dels", e))
-      })
-    val st2 = IndexManifest.committedState(path, IndexManifest.Bq)
-    if (st2.epoch != st.epoch)
-      throw new java.util.ConcurrentModificationException(
-        s"index at $path: compaction staged epoch $e over committed ${st.epoch} " +
-          s"but found ${st2.epoch} at commit time - re-run (single-writer contract)")
-    IndexManifest.commit(path, e, baseEpoch = e, IndexManifest.Bq)
-  }
+  def compactBqIndex(s: SparkSession, path: String): Unit =
+    StoredIndex.Bq.compact(s, path)
 
   /** The resolved stored words: tombstones remove word rows from
     * EARLIER epochs only (see [[deleteFromBqIndex]]); an as-of pin
@@ -4386,18 +4276,8 @@ object VectorOps {
     * family-wide time-travel rule.
     */
   private[graft] def storedBqWords(s: SparkSession, path: String,
-      asOf: Option[Long] = None): DataFrame = {
-    import graft.sources.IndexManifest
-    import s.implicits._
-    val words = IndexManifest.readAppendOnlyEpochs(
-      s, path, "words", IndexManifest.Bq, asOf)
-    val dels = IndexManifest.readAppendOnlyEpochs(
-      s, path, "dels", IndexManifest.Bq, asOf)
-      .groupBy($"vec_id").agg(max($"epoch").as("del_epoch"))
-    words.join(dels, Seq("vec_id"), "left")
-      .filter($"del_epoch".isNull || $"epoch" > $"del_epoch")
-      .select($"vec_id", $"w_lo", $"w_hi")
-  }
+      asOf: Option[Long] = None): DataFrame =
+    StoredIndex.Bq.resolved(s, path, asOf)
 
   // ---------------------------------------------------------------------
   // Stored SQ8 index — the cascade's MIDDLE tier as a day-2 artifact.
@@ -4431,19 +4311,14 @@ object VectorOps {
     // the codes on disk are guaranteed consistent with the stored
     // quantizer even if the stats computation ever changes
     val st = s.read.parquet(IndexManifest.epochDir(path, "stats", 0L))
-    // codes and dels are independent once stats has landed (guide §2.6)
-    graft.sources.Overlap.run(
-      "codes" -> { () =>
-        sq8Rows(emb, st)
-          .select($"vec_id",
-            graft.functions.GraftFunctions.sq8Pack($"codes").as("codes"))
-          .write.mode("overwrite").parquet(IndexManifest.epochDir(path, "codes", 0L))
-      },
-      "dels" -> { () =>
-        Seq.empty[Long].toDF("vec_id").write.mode("overwrite")
-          .parquet(IndexManifest.epochDir(path, "dels", 0L))
-      })
-    IndexManifest.commit(path, 0L, fmt = IndexManifest.Sq8)
+    // codes and the empty tombstones are independent once stats has
+    // landed (guide §2.6)
+    StoredIndex.Sq8.build(s, path)(
+      "codes" -> (() =>
+        StoredIndex.Sq8.writeMain(
+          sq8Rows(emb, st).select($"vec_id",
+            graft.functions.GraftFunctions.sq8Pack($"codes").as("codes")),
+          path, 0L)))
   }
 
   /** The stored quantizer: one (lo, hi) row. Lives at the WINDOW FLOOR
@@ -4458,7 +4333,7 @@ object VectorOps {
       asOf: Option[Long] = None): DataFrame = {
     import graft.sources.IndexManifest
     val st = asOf.map(IndexManifest.stateAsOf(path, _, IndexManifest.Sq8))
-      .getOrElse(IndexManifest.committedState(path, IndexManifest.Sq8))
+      .getOrElse(StoredIndex.Sq8.state(path))
     s.read.parquet(IndexManifest.epochDir(path, "stats", st.baseEpoch))
   }
 
@@ -4466,18 +4341,8 @@ object VectorOps {
     * EARLIER epochs only (epoch precedence, the family-wide rule).
     */
   private[graft] def storedSq8Codes(s: SparkSession, path: String,
-      asOf: Option[Long] = None): DataFrame = {
-    import graft.sources.IndexManifest
-    import s.implicits._
-    val codes = IndexManifest.readAppendOnlyEpochs(
-      s, path, "codes", IndexManifest.Sq8, asOf)
-    val dels = IndexManifest.readAppendOnlyEpochs(
-      s, path, "dels", IndexManifest.Sq8, asOf)
-      .groupBy($"vec_id").agg(max($"epoch").as("del_epoch"))
-    codes.join(dels, Seq("vec_id"), "left")
-      .filter($"del_epoch".isNull || $"epoch" > $"del_epoch")
-      .select($"vec_id", $"codes")
-  }
+      asOf: Option[Long] = None): DataFrame =
+    StoredIndex.Sq8.resolved(s, path, asOf)
 
   /** Decode + self-norm from a STORED (vec_id, codes) frame (codes
     * byte-packed, format v2) under quantizer `stats` — the serving-side
@@ -4522,12 +4387,11 @@ object VectorOps {
     * micro-batch is then an explicit choice, not a default tax).
     */
   def appendSq8Index(delta: DataFrame, path: String): Unit = {
-    import graft.sources.IndexManifest
     val s = delta.sparkSession
     import s.implicits._
     graft.functions.GraftFunctions.registerSq8(s)
-    val e = IndexManifest.committedEpoch(path, IndexManifest.Sq8) + 1L
-    delta.crossJoin(broadcast(storedSq8Stats(s, path)))
+    StoredIndex.Sq8.nextEpoch(path)(e => StoredIndex.Sq8.writeMain(
+      delta.crossJoin(broadcast(storedSq8Stats(s, path)))
       .withColumn("codes", expr(
         """transform(embedding, (x, i) ->
           |  CASE WHEN hi[i] > lo[i]
@@ -4535,52 +4399,26 @@ object VectorOps {
           |         CAST(floor((CAST(x AS DOUBLE) - lo[i]) * 255.0D / (hi[i] - lo[i])) AS BIGINT)))
           |       ELSE 0L END)""".stripMargin))
       .select($"vec_id",
-        graft.functions.GraftFunctions.sq8Pack($"codes").as("codes"))
-      .write.mode("overwrite").parquet(IndexManifest.epochDir(path, "codes", e))
-    IndexManifest.advance(path, e, IndexManifest.Sq8)
+        graft.functions.GraftFunctions.sq8Pack($"codes").as("codes")),
+      path, e))
   }
 
   /** Forget vectors — tombstone epoch, epoch-precedence resolution,
     * physical removal at [[compactSq8Index]] (the fleet-wide pattern).
     */
-  def deleteFromSq8Index(ids: DataFrame, path: String): Unit = {
-    import graft.sources.IndexManifest
-    val e = IndexManifest.committedEpoch(path, IndexManifest.Sq8) + 1L
-    ids.select(col("vec_id").cast("long")).distinct()
-      .write.mode("overwrite")
-      .parquet(IndexManifest.epochDir(path, "dels", e))
-    IndexManifest.advance(path, e, IndexManifest.Sq8)
-  }
+  def deleteFromSq8Index(ids: DataFrame, path: String): Unit =
+    StoredIndex.Sq8.forget(ids, path)
 
   /** Fold the window into one fresh epoch: RESOLVED codes + empty
     * tombstones + the stats copied forward (the trained quantizer
     * survives compaction unchanged), floor raised — the
     * [[compactBqIndex]] discipline.
     */
-  def compactSq8Index(s: SparkSession, path: String): Unit = {
-    import graft.sources.IndexManifest
-    import s.implicits._
-    val st = IndexManifest.committedState(path, IndexManifest.Sq8)
-    val e = st.epoch + 1L
-    // the three fold writes are independent under one commit (§2.6)
-    graft.sources.Overlap.run(
-      "codes" -> (() =>
-        storedSq8Codes(s, path).write.mode("overwrite")
-          .parquet(IndexManifest.epochDir(path, "codes", e))),
-      "dels" -> { () =>
-        Seq.empty[Long].toDF("vec_id").write.mode("overwrite")
-          .parquet(IndexManifest.epochDir(path, "dels", e))
-      },
+  def compactSq8Index(s: SparkSession, path: String): Unit =
+    StoredIndex.Sq8.compact(s, path, extra = (_, e) => Seq(
       "stats" -> (() =>
         storedSq8Stats(s, path).coalesce(1).write.mode("overwrite")
-          .parquet(IndexManifest.epochDir(path, "stats", e))))
-    val st2 = IndexManifest.committedState(path, IndexManifest.Sq8)
-    if (st2.epoch != st.epoch)
-      throw new java.util.ConcurrentModificationException(
-        s"index at $path: compaction staged epoch $e over committed ${st.epoch} " +
-          s"but found ${st2.epoch} at commit time - re-run (single-writer contract)")
-    IndexManifest.commit(path, e, baseEpoch = e, IndexManifest.Sq8)
-  }
+          .parquet(graft.sources.IndexManifest.epochDir(path, "stats", e)))))
 
   // ---------------------------------------------------------------------
   // CASCADE PAIR LIFECYCLE — the BQ and SQ8 artifacts a cascade serves
@@ -4659,7 +4497,7 @@ object VectorOps {
     */
   private[graft] def appendCascadeDurable(delta: DataFrame, bqPath: String,
       sq8Path: String, intentRoot: String, failAfter: Int): Unit = {
-    import graft.sources.{IndexManifest, LedgerIO}
+    import graft.sources.LedgerIO
     require(!LedgerIO.exists(cascadeIntentFile(intentRoot)),
       s"pending cascade-append intent at $intentRoot - resumeAppendCascade first " +
         "(one in-flight paired append per root)")
@@ -4667,8 +4505,8 @@ object VectorOps {
     delta.select(col("vec_id"), col("embedding"))
       .write.mode("overwrite").parquet(s"$intentRoot/delta")
     val rows = Seq(
-      ("bq", IndexManifest.committedEpoch(bqPath, IndexManifest.Bq), bqPath),
-      ("sq8", IndexManifest.committedEpoch(sq8Path, IndexManifest.Sq8), sq8Path))
+      ("bq", StoredIndex.Bq.head(bqPath), bqPath),
+      ("sq8", StoredIndex.Sq8.head(sq8Path), sq8Path))
     val body = ("grain=cascade-append" +:
       rows.map { case (tag, e, p) => s"$tag\t$e\t$p" }).mkString("", "\n", "\n")
     LedgerIO.writeAtomic(cascadeIntentFile(intentRoot), "._intent.tmp", body)
@@ -4707,16 +4545,11 @@ object VectorOps {
     */
   private def runCascadeAppend(s: SparkSession, intentRoot: String,
       rows: Seq[(String, Long, String)], failAfter: Int): Unit = {
-    import graft.sources.IndexManifest
     lazy val d = s.read.parquet(s"$intentRoot/delta")
     rows.zipWithIndex.foreach { case ((tag, pre, path), i) =>
       if (i >= failAfter)
         throw new RuntimeException(s"planted crash before tier '$tag' append")
-      val fmt = tag match {
-        case "bq" => IndexManifest.Bq
-        case "sq8" => IndexManifest.Sq8
-      }
-      val committed = IndexManifest.committedEpoch(path, fmt)
+      val committed = StoredIndex.byFamily(tag).head(path)
       if (committed == pre) tag match {
         case "bq" => appendBqIndex(d, path)
         case "sq8" => appendSq8Index(d, path)

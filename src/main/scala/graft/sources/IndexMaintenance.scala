@@ -29,46 +29,15 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *
   * An uncommitted root (no manifest — a crashed build) advises
   * `rebuild`: it is unreadable by contract, so neither threshold
-  * applies. Families whose forget path is not tombstone-shaped
-  * (shingle's negated counts, transition's subtraction fold, scd2's
-  * purge-rewrite) have no dels component; they report 0 and are
+  * applies. Each family's main and tombstone components come from its
+  * [[StoredIndex]] declaration. Families whose forget is not
+  * tombstone-shaped (shingle's negated counts, transition's
+  * subtraction fold) have no dels component; they report 0 and are
   * governed by the window rule alone — matching how their erasure is
-  * certified (ledger, not row counts).
+  * certified (ledger, not row counts). SCD2's purge writes `dels`
+  * tombstones over its closed history, so its purges count here.
   */
 object IndexMaintenance {
-
-  /** family → (main component, main-is-rewrite, tombstone component).
-    * The main component is the one whose row count a compaction would
-    * fold — the denominator of the dels rule. Append-only mains count
-    * the committed WINDOW (all epochs — the read amplification);
-    * rewrite mains (transition's edges) count the committed head only,
-    * since readers never union rewrite epochs.
-    */
-  private val components: Map[String, (String, Boolean, Option[String])] = Map(
-    "postings"   -> (("postings", false, Some("dels"))),
-    "lsh"        -> (("bands", false, Some("dels"))),
-    "shingle"    -> (("shingle_counts", false, None)),
-    "ivfpq"      -> (("codes", false, Some("dels"))),
-    "bq"         -> (("words", false, Some("dels"))),
-    "sq8"        -> (("codes", false, Some("dels"))),
-    "cooccur"    -> (("ui", false, Some("dels"))),
-    "transition" -> (("edges", true, None)),
-    "scd2"       -> (("closed", false, None)), // the append-only history rows
-    "layout"     -> (("data", false, Some("dels"))))
-
-  private def fmtOf(family: String): IndexManifest.Format = family match {
-    case "postings"   => IndexManifest.Postings
-    case "lsh"        => IndexManifest.Lsh
-    case "shingle"    => IndexManifest.Shingle
-    case "ivfpq"      => IndexManifest.IvfPq
-    case "transition" => IndexManifest.Transition
-    case "cooccur"    => IndexManifest.Cooccur
-    case "scd2"       => IndexManifest.Scd2
-    case "bq"         => IndexManifest.Bq
-    case "sq8"        => IndexManifest.Sq8
-    case "layout"     => IndexManifest.Layout
-    case _            => IndexManifest.AnyFamily
-  }
 
   /** One row per named index root: (name, family, window_len,
     * total_rows, del_rows, action, reason, pin_owner, pin_age_ms) with
@@ -103,15 +72,18 @@ object IndexMaintenance {
           (name, "_uncommitted", -1L, 0L, 0L, "rebuild", "no_manifest", "", -1L)
         case Some(st) =>
           val fam = st.family
-          val fmt = fmtOf(fam)
-          val (mainComp, mainRewrite, delsComp) = components.getOrElse(fam,
-            (("", false, None)): (String, Boolean, Option[String]))
-          def rows(comp: String, rewrite: Boolean): Long =
-            if (comp.isEmpty) 0L
-            else if (rewrite) IndexManifest.readRewrite(s, path, comp, fmt).count()
-            else IndexManifest.readAppendOnly(s, path, comp, fmt).count()
-          val total = rows(mainComp, mainRewrite)
-          val dels = delsComp.map(rows(_, false)).getOrElse(0L)
+          val fmt = StoredIndex.formatOf(fam)
+          val decl = StoredIndex.byFamily.get(fam)
+          // append-only mains count the committed WINDOW (all epochs —
+          // the read amplification); rewrite mains (transition's edges)
+          // count the committed head only, since readers never union
+          // rewrite epochs
+          val total = decl.fold(0L) { d =>
+            if (d.mainIsRewrite) IndexManifest.readRewrite(s, path, d.main, fmt).count()
+            else IndexManifest.readAppendOnly(s, path, d.main, fmt).count()
+          }
+          val dels = decl.flatMap(_.tombstones)
+            .fold(0L)(IndexManifest.readAppendOnly(s, path, _, fmt).count())
           val window = st.epoch - st.baseEpoch
           // ONE unpinned-stale listing + ONE pin-ledger read per index,
           // shared by the verdict, the blocked check, and the blocker
@@ -239,7 +211,7 @@ object IndexMaintenance {
         case Some(st) =>
           val findings =
             scala.collection.mutable.ArrayBuffer.empty[(String, String, String)]
-          val fmt = fmtOf(st.family)
+          val fmt = StoredIndex.formatOf(st.family)
           // an unknown family's version is unknowable - report the tag
           // and skip the version check; a family-less manifest (generic
           // tooling) checks against the default version
@@ -396,7 +368,7 @@ object IndexMaintenance {
       : (IndexManifest.State, IndexManifest.Format) = {
     val head = IndexManifest.read(src).getOrElse(throw new IllegalStateException(
       s"no commit manifest at $src - nothing exportable (crashed or pre-manifest build)"))
-    val fmt = fmtOf(head.family)
+    val fmt = StoredIndex.formatOf(head.family)
     val st = asOf.map(IndexManifest.stateAsOf(src, _, fmt))
       .getOrElse(IndexManifest.committedState(src, fmt))
     (st, fmt)

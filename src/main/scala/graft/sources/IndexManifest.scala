@@ -4,8 +4,9 @@ import org.apache.hadoop.fs.{Path => HPath}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
 
-/** Commit-marker protocol shared by the stored-index family (LSH bands,
-  * postings, IVF-PQ codes, transition graph): every index directory
+/** Commit-marker protocol shared by the ten stored-index families
+  * (postings, LSH, shingle, IVF-PQ, BQ, SQ8, co-occurrence, transition
+  * graph, SCD2, event table): every index directory
   * carries a tiny `_graft_manifest.json` naming the committed EPOCH and
   * the artifact format version. Writers stage a new epoch's data first
   * and flip the manifest last; readers resolve the manifest first and
@@ -48,6 +49,19 @@ import org.apache.spark.sql.functions.col
   * conditional-PUT adaptation, is documented on [[LedgerIO]], the
   * shared control-plane IO module every ledger in the fleet uses.
   *
+  * **The one write path.** Each family is DECLARED once as a
+  * [[StoredIndex]] (format, main component and its partition columns,
+  * tombstone key, rewrite components), and only the declaration's
+  * protocol operations move a manifest: [[StoredIndex.build]] (epoch-0
+  * components plus the empty tombstone epoch, then the initial
+  * [[commit]]), [[StoredIndex.nextEpoch]] / [[StoredIndex.advanceTo]]
+  * (stage, then [[advance]]), [[StoredIndex.compact]] /
+  * [[StoredIndex.rebase]] (stage, re-check the single writer, commit
+  * with floor = epoch), and [[StoredIndex.resolved]] (tombstones under
+  * epoch precedence). Family code supplies encoders, merges and
+  * give-backs; this object supplies the manifest, the readers, the pin
+  * ledger and the janitor.
+  *
   * Epoch values are compared against old stock: a pre-manifest index
   * has no `_graft_manifest.json` and no `epoch=` level, so the fail-fast
   * triggers before any schema confusion can.
@@ -56,8 +70,9 @@ import org.apache.spark.sql.functions.col
   * snapshot isolation for READERS, not coordination between writers —
   * two concurrent appenders both compute `committedEpoch + 1`, stage
   * into the same epoch directory, and clobber each other mid-write.
-  * [[advance]] and [[compact]] therefore re-check the committed epoch
-  * at commit time and throw [[java.util.ConcurrentModificationException]]
+  * [[advance]] and [[StoredIndex.rebase]] therefore re-check the
+  * committed epoch at commit time and throw
+  * [[java.util.ConcurrentModificationException]]
   * when another commit landed since the stage began — an optimistic
   * guard that turns the common lost-update races into loud failures
   * (the check-then-rename window is not a lock; deployments wanting
@@ -221,9 +236,10 @@ object IndexManifest {
   /** Flip the manifest to `epoch` (window floor `baseEpoch`) — the
     * commit point. Write-then-rename so a crash mid-commit leaves
     * either the old manifest or the new one, never a torn file.
-    * Unconditional — the initial-build entry point; incremental writers
-    * go through [[advance]]/[[compact]], which guard against a
-    * concurrent commit first.
+    * Unconditional — the initial-build and snapshot-clone entry point;
+    * incremental writers go through [[advance]] or
+    * [[StoredIndex.rebase]], which guard against a concurrent commit
+    * first.
     */
   def commit(path: String, epoch: Long, baseEpoch: Long = 0L,
       fmt: Format = AnyFamily): Unit = {
@@ -264,64 +280,6 @@ object IndexManifest {
           s"but found ${st.epoch} - another writer committed since this append staged; " +
           "re-run the append against the new committed state (single-writer contract)")
     commit(path, epoch, st.baseEpoch, fmt)
-  }
-
-  /** Stage (but do NOT commit) a compaction into epoch `e`: every
-    * append-only component's committed window folds into ONE fresh
-    * directory `component/epoch=e` (re-laid-out on its partition
-    * columns), and every rewrite component is copied forward to its
-    * `epoch=e` twin. All writes are overwrite-mode into e's own
-    * directories — a crashed stage is invisible and re-runnable, the
-    * same discipline as the appenders'.
-    */
-  def stageCompact(
-      s: SparkSession,
-      path: String,
-      appendOnly: Seq[(String, Seq[String])],
-      rewrite: Seq[String],
-      e: Long,
-      fmt: Format = AnyFamily): Unit = {
-    appendOnly.foreach { case (comp, parts) =>
-      val df = readAppendOnly(s, path, comp, fmt)
-      val writer =
-        if (parts.nonEmpty)
-          df.repartition(parts.map(col): _*).write.partitionBy(parts: _*)
-        else df.write
-      writer.mode("overwrite").parquet(epochDir(path, comp, e))
-    }
-    rewrite.foreach { comp =>
-      readRewrite(s, path, comp, fmt)
-        .write.mode("overwrite").parquet(epochDir(path, comp, e))
-    }
-  }
-
-  /** Compact an index in place: fold the committed epoch window into a
-    * single fresh epoch and RAISE THE WINDOW FLOOR past the superseded
-    * directories (base_epoch = epoch = e). Readers see the old window
-    * until the atomic manifest flip, then only the compacted copy; the
-    * stale epoch directories are garbage outside the committed window —
-    * deletable by any janitor at leisure, never read again. This is the
-    * day-N lifecycle completion for the append family: appends accrete
-    * epoch directories (and small files) forever without it.
-    */
-  def compact(
-      s: SparkSession,
-      path: String,
-      appendOnly: Seq[(String, Seq[String])],
-      rewrite: Seq[String],
-      fmt: Format = AnyFamily): Unit = {
-    val e = committedState(path, fmt).epoch + 1L
-    stageCompact(s, path, appendOnly, rewrite, e, fmt)
-    // same optimistic commit-time guard as advance(): a writer that
-    // landed while the fold ran would be silently erased by the floor
-    // raise — fail the compaction loudly instead and let it re-run.
-    val st = committedState(path, fmt)
-    if (st.epoch != e - 1L)
-      throw new java.util.ConcurrentModificationException(
-        s"index at $path: compaction staged epoch $e over committed ${e - 1L} " +
-          s"but found ${st.epoch} at commit time - a concurrent append landed; " +
-          "re-run the compaction (single-writer contract)")
-    commit(path, e, baseEpoch = e, fmt)
   }
 
   // ---------------------------------------------------------------------
@@ -476,7 +434,7 @@ object IndexManifest {
   }
 
   /** Delete epoch directories strictly BELOW the committed window floor
-    * — the janitor half of [[compact]]. Only ever touches epochs no
+    * — the janitor half of [[StoredIndex.compact]]. Only ever touches epochs no
     * reader can resolve again (the floor is monotone: appends preserve
     * it, compactions raise it), so vacuum is safe to run any time,
     * including concurrently with readers mid-query on local/HDFS
@@ -487,7 +445,9 @@ object IndexManifest {
     * writer's in-flight stage. Directories inside a registered pin's
     * [floor, epoch] window are skipped (see the pin-ledger section) —
     * release the pin to reclaim them. Returns the number of
-    * directories removed.
+    * directories removed. With no `fmt`, the family comes from the
+    * manifest's own tag ([[StoredIndex.formatOf]]), so the janitor
+    * reads every family at its own format version.
     */
   def vacuum(path: String, fmt: Format = AnyFamily): Long = {
     var removed = 0L
@@ -512,15 +472,6 @@ object IndexManifest {
     removed
   }
 
-  /** The epoch/generation directories strictly below the committed
-    * window floor — [[vacuum]]'s worklist, exposed read-only so the
-    * maintenance advisor can report reclaimable garbage without
-    * touching it. epoch=<e> slices below the floor are a compaction's
-    * superseded inputs; gen=<g> GENERATION directories (IVF-PQ
-    * centroids) obey the gen == baseEpoch invariant, so a gen below
-    * the floor was superseded by the rebalance/compaction that rebased
-    * the window — both are unreachable by any reader, head or as-of.
-    */
   /** The ONE parser of the `epoch=<n>` / `gen=<n>` directory-name
     * convention — staleDirs, the advisor, and fsck all read versioned
     * directories through this, so the convention cannot drift between
@@ -538,13 +489,31 @@ object IndexManifest {
     else None
   }
 
+  /** `fmt`, or — for the wildcard — the format the manifest's own
+    * family tag declares.
+    */
+  private def ownFormat(path: String, fmt: Format): Format =
+    if (fmt != AnyFamily) fmt
+    else read(path).map(st => StoredIndex.formatOf(st.family)).getOrElse(fmt)
+
+  /** The epoch/generation directories strictly below the committed
+    * window floor — [[vacuum]]'s worklist, exposed read-only so the
+    * maintenance advisor can report reclaimable garbage without
+    * touching it. epoch=<e> slices below the floor are a compaction's
+    * superseded inputs; gen=<g> GENERATION directories (IVF-PQ
+    * centroids) obey the gen == baseEpoch invariant, so a gen below
+    * the floor was superseded by the rebalance/compaction that rebased
+    * the window — both are unreachable by any reader, head or as-of.
+    * The floor is read at the manifest's own family format when `fmt`
+    * is the wildcard.
+    */
   private[graft] def staleDirs(path: String,
       fmt: Format = AnyFamily,
       respectPins: Boolean = true): Seq[HPath] = {
     // respectPins=true is what every janitor path uses; the advisor
     // passes false to SEE blocked-but-reclaimable garbage and name the
     // pin instead of advising destruction.
-    val floor = committedState(path, fmt).baseEpoch
+    val floor = committedState(path, ownFormat(path, fmt)).baseEpoch
     val live = if (respectPins) pins(path) else Seq.empty
     LedgerIO.listStatus(LedgerIO.root(path))
       .filter(_.isDirectory).flatMap { compDir =>

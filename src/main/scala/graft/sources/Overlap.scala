@@ -13,10 +13,17 @@ package graft.sources
   * the tasks in declaration order on the caller thread — the paired-A/B
   * switch (ProfFleet) and the escape hatch for a driver where
   * concurrent root builds would contend with higher-priority jobs.
-  * Failure semantics match the sequential form: the first failing
-  * task's exception propagates (remaining tasks may have run — exactly
-  * the crash window the manifest protocol already tolerates, since
-  * nothing commits until the caller does).
+  *
+  * Failure semantics: the first failing task's exception propagates,
+  * but only after every sibling has STOPPED. The siblings' Spark jobs
+  * carry one job tag per run and are cancelled through it, their
+  * threads are interrupted, and `run` waits for each of them to return
+  * before rethrowing — so a caller retrying the failed stage never
+  * races a sibling still writing into the same epoch directory. (The
+  * sequential form stops at the failing task; the overlapped form may
+  * have finished some siblings first — either way nothing commits
+  * until the caller does, the crash window the manifest protocol
+  * already tolerates.)
   */
 private[graft] object Overlap {
 
@@ -26,15 +33,40 @@ private[graft] object Overlap {
 
   def run(tasks: (String, () => Unit)*): Unit = {
     if (tasks.size <= 1 || sequentialMode) { tasks.foreach(_._2()); return }
+    val sc = {
+      import org.apache.spark.sql.SparkSession
+      SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession).map(_.sparkContext)
+    }
+    val tag = s"graft-overlap-${java.util.UUID.randomUUID()}"
     val pool = java.util.concurrent.Executors.newFixedThreadPool(tasks.size)
+    val done = new java.util.concurrent.ExecutorCompletionService[Unit](pool)
     try {
       val futs = tasks.map { case (_, f) =>
-        pool.submit(new java.util.concurrent.Callable[Unit] {
-          def call(): Unit = f()
+        done.submit(new java.util.concurrent.Callable[Unit] {
+          def call(): Unit = {
+            sc.foreach(_.addJobTag(tag))
+            try f() finally sc.foreach(_.removeJobTag(tag))
+          }
         })
       }
-      try futs.foreach(_.get())
-      catch { case e: java.util.concurrent.ExecutionException => throw e.getCause }
-    } finally pool.shutdown()
+      // completion order, not declaration order: the FIRST failure
+      // stops the run, whichever task it came from
+      var failure: Option[Throwable] = None
+      var finished = 0
+      while (failure.isEmpty && finished < futs.size) {
+        try done.take().get()
+        catch { case e: java.util.concurrent.ExecutionException => failure = Some(e.getCause) }
+        finished += 1
+      }
+      failure.foreach { cause =>
+        sc.foreach(_.cancelJobsWithTag(tag))
+        futs.foreach(_.cancel(true))
+        pool.shutdown()
+        while (!pool.awaitTermination(1L, java.util.concurrent.TimeUnit.SECONDS)) {
+          sc.foreach(_.cancelJobsWithTag(tag)) // a job a sibling started since
+        }
+        throw cause
+      }
+    } finally pool.shutdownNow()
   }
 }

@@ -1215,22 +1215,22 @@ object Streams {
   private[graft] def applyEventTableBatch(
       batch: DataFrame, path: String, ledgerDir: String, batchId: Long,
       nFiles: Int = 4): Unit = {
-    import graft.sources.{IndexManifest, LedgerIO}
+    import graft.sources.{LedgerIO, StoredIndex}
+    val table = StoredIndex.Layout
     val entry = LedgerIO.child(ledgerDir, s"batch-$batchId.ledger")
     val e: Long = LedgerIO.readIfExists(entry) match {
       case Some(text) => text.trim.toLong
       case None =>
-        val next = IndexManifest.committedEpoch(path, IndexManifest.Layout) + 1L
+        val next = table.pending(path)
         LedgerIO.writeAtomic(entry, s".batch-$batchId.tmp", s"$next\n")
         next
     }
-    val committed = IndexManifest.committedEpoch(path, IndexManifest.Layout)
-    if (committed == e - 1L) {
-      graft.queries.LayoutOps.stageTableEpoch(batch, path, e, nFiles)
-      // advance() re-checks committed == e-1 at the flip, so a foreign
+    val committed = table.head(path)
+    if (committed == e - 1L)
+      // the advance re-checks committed == e-1 at the flip, so a foreign
       // writer racing the stage still fails loudly there
-      IndexManifest.advance(path, e, IndexManifest.Layout)
-    } else if (committed < e - 1L)
+      table.advanceTo(path, e)(graft.queries.LayoutOps.stageTableEpoch(batch, path, _, nFiles))
+    else if (committed < e - 1L)
       // the table went BACKWARDS under the stream (rebuilt out-of-band):
       // diagnose it by name BEFORE staging a full epoch that advance()
       // would only reject afterwards with the generic guard

@@ -128,9 +128,10 @@ class IndexManifestSpec extends SparkSpec {
     val beforeTop = top(dir)
     val beforePosts = posts(dir)
 
-    // kill drill: stage the compaction without committing — reads frozen
-    IndexManifest.stageCompact(spark, dir,
-      Seq("postings" -> Seq("bucket")), Seq("terms", "corpus"), e = 3L)
+    // kill drill: stage the REAL postings compaction (exactly what
+    // compactPostingsIndex stages) and die before the flip — reads frozen
+    StoredIndex.Postings.stageCompaction(spark, dir,
+      IndexManifest.committedState(dir, IndexManifest.Postings), e = 3L)
     assert(IndexManifest.committedState(dir) === IndexManifest.State(2, 2L, 0L, "postings"))
     assert(top(dir) === beforeTop && posts(dir) === beforePosts,
       "uncommitted compaction leaked into reads")
