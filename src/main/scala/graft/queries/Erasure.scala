@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.sources.StoredIndex
+import graft.sources.{EpochLedger, StoredIndex}
 
 /** One-call right-to-be-forgotten across the stored-artifact fleet.
   *
@@ -35,9 +35,10 @@ import graft.sources.StoredIndex
   * [[DocTargets.ordered]] / [[UserTargets.ordered]], and
   * [[committedEpochs]] snapshots each target's committed epoch. Record
   * that snapshot before calling; after a crash, every target whose
-  * epoch ADVANCED is done (single-writer contract: nobody else moves
-  * the manifest), so resume with [[DocTargets.remaining]] — the spec
-  * drives exactly this crash-and-resume drill.
+  * epoch advanced by one is done, so resume with
+  * [[DocTargets.remaining]] — the [[graft.sources.EpochLedger]] rule,
+  * which throws rather than skip a target a foreign writer moved. The
+  * spec drives exactly this crash-and-resume drill.
   *
   * [[forgetDocsDurable]]/[[forgetUsersDurable]] remove the last
   * caller-held state: request + snapshot persist as a fleet-level
@@ -68,19 +69,18 @@ object Erasure {
 
     /** The targets whose committed epoch still equals the pre-call
       * snapshot — i.e. the families a crashed erasure did NOT reach.
+      * Throws when a foreign writer moved a target.
       */
     def remaining(snapshot: Map[String, Long]): DocTargets = {
-      def keep(tag: String, p: Option[String]): Option[String] =
-        p.filter(path => snapshot.get(tag).forall(pre =>
-          declOf(tag).head(path) == pre))
+      val keep = remainingTags(ordered, snapshot)
       DocTargets(
-        postings = keep("postings", postings),
-        lsh = keep("lsh", lsh),
-        shingle = keep("shingle", shingle),
-        scd2 = keep("scd2", scd2),
-        ivfPq = keep("ivfpq", ivfPq),
-        bq = keep("bq", bq),
-        sq8 = keep("sq8", sq8))
+        postings = postings.filter(_ => keep("postings")),
+        lsh = lsh.filter(_ => keep("lsh")),
+        shingle = shingle.filter(_ => keep("shingle")),
+        scd2 = scd2.filter(_ => keep("scd2")),
+        ivfPq = ivfPq.filter(_ => keep("ivfpq")),
+        bq = bq.filter(_ => keep("bq")),
+        sq8 = sq8.filter(_ => keep("sq8")))
     }
   }
 
@@ -99,29 +99,30 @@ object Erasure {
         .collect { case (tag, Some(p)) => tag -> p }
 
     def remaining(snapshot: Map[String, Long]): UserTargets = {
-      def keep(tag: String, p: Option[String]): Option[String] =
-        p.filter(path => snapshot.get(tag).forall(pre =>
-          declOf(tag).head(path) == pre))
+      val keep = remainingTags(ordered, snapshot)
       UserTargets(
-        cooccur = keep("cooccur", cooccur),
-        transition = keep("transition", transition),
-        table = keep("table", table))
+        cooccur = cooccur.filter(_ => keep("cooccur")),
+        transition = transition.filter(_ => keep("transition")),
+        table = table.filter(_ => keep("table")))
     }
   }
 
-  /** A target tag's declaration — the tags are the family tags, except
-    * `table` (persisted in intent ledgers) for the event table.
+  /** The tags a snapshot leaves pending: the ledger's classification of
+    * every snapshotted target, plus any target the snapshot lacks.
     */
-  private def declOf(tag: String): StoredIndex =
-    StoredIndex.byFamily(if (tag == "table") StoredIndex.Layout.family else tag)
+  private def remainingTags(ordered: Seq[(String, String)],
+      snapshot: Map[String, Long]): Set[String] = {
+    val (known, fresh) = ordered.partition { case (tag, _) => snapshot.contains(tag) }
+    (EpochLedger.classify("the caller's epoch snapshot",
+      EpochLedger.legs(known).map(l => l -> snapshot(l.tag))).map(_.tag) ++
+      fresh.map(_._1)).toSet
+  }
 
   /** Snapshot each target's committed epoch — the caller's pre-call
     * ledger entry for the resume protocol.
     */
   def committedEpochs(targets: Seq[(String, String)]): Map[String, Long] =
-    targets.map { case (tag, path) =>
-      tag -> declOf(tag).head(path)
-    }.toMap
+    EpochLedger.legs(targets).map(l => l.tag -> l.head()).toMap
 
   /** Erase documents from every deployed doc-grain artifact.
     * `docs` columns: `doc_id` always; `text` additionally when
@@ -132,18 +133,19 @@ object Erasure {
     * for the crash/resume protocol.
     */
   def forgetDocs(docs: DataFrame, targets: DocTargets): Unit =
-    runDocFamilies(docs, targets, failAfter = Int.MaxValue)
+    runDocFamilies(docs, EpochLedger.legs(targets.ordered))
 
-  /** The fan-out loop, with a planted-crash hook for the drills:
-    * `failAfter = k` throws after k families committed.
+  /** The fan-out loop over the legs in order, with a planted-crash
+    * hook for the drills: `failAfter = k` throws after k families
+    * committed.
     */
-  private def runDocFamilies(docs: DataFrame, targets: DocTargets,
-      failAfter: Int): Unit = {
+  private[graft] def runDocFamilies(docs: DataFrame, legs: Seq[EpochLedger.Leg],
+      failAfter: Int = Int.MaxValue): Unit = {
     // one materialization feeds up to seven fan-out reads
     val d = docs.localCheckpoint(true)
     val ids = d.select(col("doc_id"))
     val vecIds = d.select(col("doc_id").as("vec_id"))
-    targets.ordered.zipWithIndex.foreach { case ((tag, p), i) =>
+    legs.zipWithIndex.foreach { case (EpochLedger.Leg(tag, p, _), i) =>
       if (i >= failAfter)
         throw new RuntimeException(s"planted crash before family '$tag'")
       tag match {
@@ -167,14 +169,14 @@ object Erasure {
     */
   def forgetUsers(users: DataFrame, targets: UserTargets,
       userEvs: Option[DataFrame] = None): Unit =
-    runUserFamilies(users, targets, userEvs, failAfter = Int.MaxValue)
+    runUserFamilies(users, EpochLedger.legs(targets.ordered), userEvs)
 
-  private def runUserFamilies(users: DataFrame, targets: UserTargets,
-      userEvs: Option[DataFrame], failAfter: Int): Unit = {
-    require(targets.transition.isEmpty || userEvs.nonEmpty,
+  private[graft] def runUserFamilies(users: DataFrame, legs: Seq[EpochLedger.Leg],
+      userEvs: Option[DataFrame], failAfter: Int = Int.MaxValue): Unit = {
+    require(!legs.exists(_.tag == "transition") || userEvs.nonEmpty,
       "transition-graph erasure needs the users' event slice (userEvs)")
     val u = users.select(col("user_id")).localCheckpoint(true)
-    targets.ordered.zipWithIndex.foreach { case ((tag, p), i) =>
+    legs.zipWithIndex.foreach { case (EpochLedger.Leg(tag, p, _), i) =>
       if (i >= failAfter)
         throw new RuntimeException(s"planted crash before family '$tag'")
       tag match {
@@ -188,76 +190,14 @@ object Erasure {
   }
 
   // ---------------------------------------------------------------------
-  // DURABLE erasure — the fleet-level INTENT LEDGER. The plain
-  // forgetDocs/forgetUsers resume protocol depends on a caller-held
-  // epoch snapshot: if the CALLER crashes without persisting it, resume
-  // is ambiguous. The durable entry points close that hole by persisting
-  // the request AND the pre-call snapshot under a fleet root BEFORE any
-  // index is touched, so a crashed erasure resumes from DISK alone:
-  //
-  //   <intentRoot>/request/        the request rows (parquet)
-  //   <intentRoot>/user_events/    the users' event slice (user grain,
-  //                                when the transition graph is targeted)
-  //   <intentRoot>/_intent.ledger  grain + (family, pre-epoch, path)
-  //                                rows — written LAST via tmp+rename,
-  //                                so its presence implies the payload
-  //                                is complete
-  //
-  // Completion renames the intent to `_completed.ledger` (the audit
-  // trail a certificate run pairs with). Exactly one in-flight intent
-  // per root: starting a new durable erasure over a pending intent
-  // fails fast instead of interleaving two requests' snapshots. The
-  // out-of-band-writer caveat is unchanged from the class doc: "epoch
-  // advanced" reads as "this family committed", so the fleet must have
-  // no other writers between crash and resume.
+  // DURABLE erasure. The resume protocol above depends on a
+  // caller-held snapshot: if the CALLER crashes before persisting it,
+  // resume is ambiguous. The durable entry points persist the request
+  // under a fleet root (`request/`, plus `user_events/` when the
+  // transition graph is targeted) and then the [[EpochLedger]] intent,
+  // so a crashed erasure resumes from DISK alone. One in-flight intent
+  // per root: a new durable erasure over a pending one fails fast.
   // ---------------------------------------------------------------------
-
-  import graft.sources.LedgerIO
-
-  private def intentFile(root: String) = LedgerIO.child(root, "_intent.ledger")
-
-  private def writeIntent(root: String, grain: String,
-      rows: Seq[(String, Long, String)]): Unit = {
-    val body = (s"grain=$grain" +: rows.map { case (tag, e, p) => s"$tag\t$e\t$p" })
-      .mkString("", "\n", "\n")
-    LedgerIO.writeAtomic(intentFile(root), "._intent.tmp", body)
-  }
-
-  private def readIntent(root: String, expectGrain: String): Seq[(String, Long, String)] = {
-    val text = LedgerIO.readIfExists(intentFile(root)).getOrElse(
-      throw new IllegalArgumentException(
-        s"requirement failed: no pending erasure intent at $root - nothing to resume"))
-    val lines = text.linesIterator.filter(_.nonEmpty).toSeq
-    require(lines.headOption.contains(s"grain=$expectGrain"),
-      s"intent at $root is '${lines.headOption.getOrElse("")}', expected grain=$expectGrain")
-    lines.tail.map { ln =>
-      val Array(tag, e, p) = ln.split('\t')
-      (tag, e.toLong, p)
-    }
-  }
-
-  private def completeIntent(root: String): Unit =
-    LedgerIO.renameOverwrite(intentFile(root),
-      LedgerIO.child(root, "_completed.ledger"))
-
-  private def docTargetsOf(rows: Seq[(String, Long, String)]): DocTargets = {
-    val m = rows.map { case (tag, _, p) => tag -> p }.toMap
-    DocTargets(postings = m.get("postings"), lsh = m.get("lsh"),
-      shingle = m.get("shingle"), scd2 = m.get("scd2"),
-      ivfPq = m.get("ivfpq"), bq = m.get("bq"), sq8 = m.get("sq8"))
-  }
-
-  /** Reconstruct the user-grain targets from persisted intent rows —
-    * the single place the tag→field mapping lives, so a future family
-    * can't be silently dropped on resume (the round-16 defect: resume
-    * rebuilt UserTargets inline and omitted `table`, so a crash before
-    * the event-table tombstone resumed to a false "completed").
-    */
-  private def userTargetsOf(rows: Seq[(String, Long, String)]): UserTargets = {
-    val m = rows.map { case (tag, _, p) => tag -> p }.toMap
-    UserTargets(cooccur = m.get("cooccur"), transition = m.get("transition"),
-      table = m.get("table"))
-  }
 
   /** [[forgetDocs]] with the intent persisted first — crash-resumable
     * from disk alone via [[resumeForgetDocs]]. `docs` needs the same
@@ -271,31 +211,26 @@ object Erasure {
 
   private[queries] def forgetDocsDurable(docs: DataFrame, targets: DocTargets,
       intentRoot: String, failAfter: Int): Unit = {
-    require(!LedgerIO.exists(intentFile(intentRoot)),
+    require(!EpochLedger.isOpen(intentRoot),
       s"pending erasure intent at $intentRoot - resumeForgetDocs first " +
         "(one in-flight erasure per fleet root)")
     val s = docs.sparkSession
     docs.write.mode("overwrite").parquet(s"$intentRoot/request")
-    val snap = committedEpochs(targets.ordered)
-    writeIntent(intentRoot, "doc",
-      targets.ordered.map { case (tag, p) => (tag, snap(tag), p) })
-    runDocFamilies(s.read.parquet(s"$intentRoot/request"), targets, failAfter)
-    completeIntent(intentRoot)
+    val legs = EpochLedger.pending(EpochLedger.intent(intentRoot), "doc",
+      EpochLedger.legs(targets.ordered))
+    runDocFamilies(s.read.parquet(s"$intentRoot/request"), legs, failAfter)
+    EpochLedger.complete(intentRoot)
   }
 
   /** Resume a crashed [[forgetDocsDurable]] from DISK alone: the
     * request, targets, and pre-call snapshot all come from the intent
-    * root; families whose epoch advanced past the persisted snapshot
-    * are already done and are skipped (never double-subtracted).
+    * root; families already done are skipped (never double-subtracted).
     */
   def resumeForgetDocs(s: SparkSession, intentRoot: String): Unit = {
-    val rows = readIntent(intentRoot, "doc")
-    val snapshot = rows.map { case (tag, e, _) => tag -> e }.toMap
-    val remaining = docTargetsOf(rows).remaining(snapshot)
-    if (remaining.ordered.nonEmpty)
-      runDocFamilies(s.read.parquet(s"$intentRoot/request"), remaining,
-        failAfter = Int.MaxValue)
-    completeIntent(intentRoot)
+    val legs = EpochLedger.resume(intentRoot, "doc", "erasure")
+    if (legs.nonEmpty)
+      runDocFamilies(s.read.parquet(s"$intentRoot/request"), legs)
+    EpochLedger.complete(intentRoot)
   }
 
   /** [[forgetUsers]], durable. `userEvs` (required when transition is
@@ -308,7 +243,7 @@ object Erasure {
 
   private[queries] def forgetUsersDurable(users: DataFrame, targets: UserTargets,
       userEvs: Option[DataFrame], intentRoot: String, failAfter: Int): Unit = {
-    require(!LedgerIO.exists(intentFile(intentRoot)),
+    require(!EpochLedger.isOpen(intentRoot),
       s"pending erasure intent at $intentRoot - resumeForgetUsers first " +
         "(one in-flight erasure per fleet root)")
     require(targets.transition.isEmpty || userEvs.nonEmpty,
@@ -317,28 +252,24 @@ object Erasure {
     users.select(col("user_id")).write.mode("overwrite")
       .parquet(s"$intentRoot/request")
     userEvs.foreach(_.write.mode("overwrite").parquet(s"$intentRoot/user_events"))
-    val snap = committedEpochs(targets.ordered)
-    writeIntent(intentRoot, "user",
-      targets.ordered.map { case (tag, p) => (tag, snap(tag), p) })
-    runUserFamilies(s.read.parquet(s"$intentRoot/request"), targets,
+    val legs = EpochLedger.pending(EpochLedger.intent(intentRoot), "user",
+      EpochLedger.legs(targets.ordered))
+    runUserFamilies(s.read.parquet(s"$intentRoot/request"), legs,
       userEvs.map(_ => s.read.parquet(s"$intentRoot/user_events")), failAfter)
-    completeIntent(intentRoot)
+    EpochLedger.complete(intentRoot)
   }
 
   /** Resume a crashed [[forgetUsersDurable]] from disk alone. */
   def resumeForgetUsers(s: SparkSession, intentRoot: String): Unit = {
-    val rows = readIntent(intentRoot, "user")
-    val snapshot = rows.map { case (tag, e, _) => tag -> e }.toMap
-    val remaining = userTargetsOf(rows).remaining(snapshot)
-    if (remaining.ordered.nonEmpty) {
+    val legs = EpochLedger.resume(intentRoot, "user", "erasure")
+    if (legs.nonEmpty) {
       val evs =
-        if (remaining.transition.nonEmpty)
+        if (legs.exists(_.tag == "transition"))
           Some(s.read.parquet(s"$intentRoot/user_events"))
         else None
-      runUserFamilies(s.read.parquet(s"$intentRoot/request"), remaining, evs,
-        failAfter = Int.MaxValue)
+      runUserFamilies(s.read.parquet(s"$intentRoot/request"), legs, evs)
     }
-    completeIntent(intentRoot)
+    EpochLedger.complete(intentRoot)
   }
 
   /** ERASURE CERTIFICATE — auditable proof of absence, the compliance

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.sources.{StoredIndex, Tables}
+import graft.sources.{EpochLedger, StoredIndex, Tables}
 
 /** Embedding / similarity-search query pack over the `embeddings` table
   * (64-dim float vectors, int label) — the ANN / near-dup operators a
@@ -4424,22 +4424,10 @@ object VectorOps {
   // CASCADE PAIR LIFECYCLE — the BQ and SQ8 artifacts a cascade serves
   // from must index the SAME vec_id set (the coverage contract on
   // [[searchCascadeIndex]]: a vector present in only one tier is
-  // dropped at the tier-2 join, deliberately fail-closed). Ingest,
-  // however, is two separate appends — a crash between appendBqIndex
-  // and appendSq8Index leaves a vector that is silently unservable
-  // FOREVER (screened but no codes row, or coded but never screened),
-  // and nothing else in the fleet surfaces it: t_index_catalog shows
-  // epochs, not coverage. Two closures:
-  //   - [[cascadeCoverageAudit]] makes divergence OBSERVABLE: one
-  //     full-outer id pass counting ids in exactly one tier (0/0 on a
-  //     healthy pair).
-  //   - [[appendCascadeDurable]]/[[resumeAppendCascade]] make ingest
-  //     ATOMIC-ENOUGH: the Erasure intent-ledger discipline applied to
-  //     the paired append — delta + per-artifact epoch snapshot persist
-  //     BEFORE either index is touched, so a crash between the two
-  //     appends resumes from disk alone, skipping the tier whose epoch
-  //     already advanced (single-writer contract) and restoring
-  //     coverage.
+  // dropped at the tier-2 join, deliberately fail-closed). Ingest is
+  // two separate appends, so a crash between them leaves a vector
+  // silently unservable forever. [[cascadeCoverageAudit]] makes that
+  // divergence observable; [[appendCascadeDurable]] closes the window.
   // ---------------------------------------------------------------------
 
   /** One row (both_tiers, bq_only, sq8_only): vec_ids by tier
@@ -4468,23 +4456,14 @@ object VectorOps {
           .otherwise(0L)), lit(0L)).as("sq8_only"))
   }
 
-  private def cascadeIntentFile(root: String) =
-    graft.sources.LedgerIO.child(root, "_intent.ledger")
-
-  /** The paired BQ+SQ8 append under the durable intent-ledger
-    * discipline ([[graft.queries.Erasure]]'s pattern): the delta and
-    * each artifact's pre-append committed epoch persist under
-    * `intentRoot` BEFORE either index is touched
-    * (`delta/` parquet, then `_intent.ledger` via tmp+rename — its
-    * presence implies the payload is complete), the two appends run in
-    * fixed order (bq, then sq8), and completion renames the intent to
-    * `_completed.ledger`. A crash anywhere resumes from DISK alone via
-    * [[resumeAppendCascade]]: a tier whose epoch advanced past its
-    * snapshot is done (single-writer contract — same caveat as every
-    * ledger in the fleet), the other replays its staged append
-    * idempotently. One in-flight intent per root, enforced.
-    * Caller contract unchanged from the underlying appenders: NEW ids
-    * only (see [[appendSq8Index]]).
+  /** The paired BQ+SQ8 append under an [[EpochLedger]] intent: the
+    * delta persists under `intentRoot` (`delta/`), then the intent,
+    * BEFORE either index is touched; the two appends run in fixed order
+    * (bq, then sq8). A crash anywhere resumes from DISK alone via
+    * [[resumeAppendCascade]], which appends only the tier that has not
+    * advanced, restoring coverage. One in-flight intent per root,
+    * enforced. Caller contract unchanged from the underlying appenders:
+    * NEW ids only (see [[appendSq8Index]]).
     */
   def appendCascadeDurable(delta: DataFrame, bqPath: String, sq8Path: String,
       intentRoot: String): Unit =
@@ -4497,86 +4476,36 @@ object VectorOps {
     */
   private[graft] def appendCascadeDurable(delta: DataFrame, bqPath: String,
       sq8Path: String, intentRoot: String, failAfter: Int): Unit = {
-    import graft.sources.LedgerIO
-    require(!LedgerIO.exists(cascadeIntentFile(intentRoot)),
+    require(!EpochLedger.isOpen(intentRoot),
       s"pending cascade-append intent at $intentRoot - resumeAppendCascade first " +
         "(one in-flight paired append per root)")
-    val s = delta.sparkSession
     delta.select(col("vec_id"), col("embedding"))
       .write.mode("overwrite").parquet(s"$intentRoot/delta")
-    val rows = Seq(
-      ("bq", StoredIndex.Bq.head(bqPath), bqPath),
-      ("sq8", StoredIndex.Sq8.head(sq8Path), sq8Path))
-    val body = ("grain=cascade-append" +:
-      rows.map { case (tag, e, p) => s"$tag\t$e\t$p" }).mkString("", "\n", "\n")
-    LedgerIO.writeAtomic(cascadeIntentFile(intentRoot), "._intent.tmp", body)
-    runCascadeAppend(s, intentRoot, rows, failAfter)
-    completeCascadeIntent(intentRoot)
+    runCascadeAppend(delta.sparkSession, intentRoot,
+      EpochLedger.pending(EpochLedger.intent(intentRoot), "cascade-append",
+        EpochLedger.legs(Seq("bq" -> bqPath, "sq8" -> sq8Path))), failAfter)
   }
 
   /** Resume a crashed [[appendCascadeDurable]] from disk alone. */
-  def resumeAppendCascade(s: SparkSession, intentRoot: String): Unit = {
-    import graft.sources.LedgerIO
-    val text = LedgerIO.readIfExists(cascadeIntentFile(intentRoot)).getOrElse(
-      throw new IllegalArgumentException("requirement failed: " +
-        s"no pending cascade-append intent at $intentRoot - nothing to resume"))
-    val lines = text.linesIterator.filter(_.nonEmpty).toSeq
-    require(lines.headOption.contains("grain=cascade-append"),
-      s"intent at $intentRoot is '${lines.headOption.getOrElse("")}', " +
-        "expected grain=cascade-append")
-    val rows = lines.tail.map { ln =>
-      val Array(tag, e, p) = ln.split('\t')
-      (tag, e.toLong, p)
-    }
-    runCascadeAppend(s, intentRoot, rows, failAfter = Int.MaxValue)
-    completeCascadeIntent(intentRoot)
-  }
+  def resumeAppendCascade(s: SparkSession, intentRoot: String): Unit =
+    runCascadeAppend(s, intentRoot, EpochLedger.resume(intentRoot, "cascade-append",
+      "cascade-append"), failAfter = Int.MaxValue)
 
-  /** The fan-out: each tier applies its append iff its committed epoch
-    * still equals the persisted snapshot — an advanced-BY-ONE epoch
-    * means that tier's append already committed (the manifests ARE the
-    * ledger, exactly the Erasure resume rule), so replay never
-    * double-appends. Any OTHER epoch is a single-writer violation: this
-    * protocol commits exactly one epoch per tier, so a manifest more
-    * than one ahead of the intent's snapshot (or behind it) was moved
-    * by a foreign writer mid-stream — skipping would silently drop this
-    * delta from that tier (and silently diverge the pair), so it throws
-    * naming the foreign epoch instead.
-    */
+  /** Append the delta to each pending tier, then settle the intent. */
   private def runCascadeAppend(s: SparkSession, intentRoot: String,
-      rows: Seq[(String, Long, String)], failAfter: Int): Unit = {
+      legs: Seq[EpochLedger.Leg], failAfter: Int): Unit = {
     lazy val d = s.read.parquet(s"$intentRoot/delta")
-    rows.zipWithIndex.foreach { case ((tag, pre, path), i) =>
+    legs.zipWithIndex.foreach { case (leg, i) =>
       if (i >= failAfter)
-        throw new RuntimeException(s"planted crash before tier '$tag' append")
-      val committed = StoredIndex.byFamily(tag).head(path)
-      if (committed == pre) tag match {
-        case "bq" => appendBqIndex(d, path)
-        case "sq8" => appendSq8Index(d, path)
+        throw new RuntimeException(s"planted crash before tier '${leg.tag}' append")
+      leg.tag match {
+        case "bq" => appendBqIndex(d, leg.path)
+        case "sq8" => appendSq8Index(d, leg.path)
       }
-      else if (committed != pre + 1L)
-        throw new java.util.ConcurrentModificationException(
-          s"single-writer violation on the cascade ingest: tier '$tag' at $path " +
-            s"has committed epoch $committed but this batch's intent snapshot is $pre - " +
-            s"a foreign writer moved the manifest mid-stream; refusing to resume " +
-            "(a skip would silently drop this delta and diverge the pair)")
-      // committed == pre + 1: this tier's append already landed - resume no-op
     }
+    EpochLedger.complete(intentRoot)
   }
 
-  private def completeCascadeIntent(root: String): Unit =
-    graft.sources.LedgerIO.renameOverwrite(cascadeIntentFile(root),
-      graft.sources.LedgerIO.child(root, "_completed.ledger"))
-
-  /** The coverage audit oracle-gated with a PLANTED half-append: build
-    * the pair from the corpus, then land 5 new vectors in BQ only —
-    * exactly the state a crash between the two tier appends leaves
-    * (which [[appendCascadeDurable]] exists to heal; the drill in
-    * CascadePairSpec crashes for real and resumes). The audit must
-    * report the full corpus in both tiers, the 5 orphans as bq_only,
-    * and nothing sq8-only; the oracle recomputes all three counts from
-    * the corpus by construction.
-    */
   // ---------------------------------------------------------------------
   // Filtered search at the STORED tier — the pre-filter argument above
   // carried into the deployment funnel: filter → compressed screen →
@@ -4668,6 +4597,15 @@ object VectorOps {
     """.stripMargin.trim),
   )
 
+  /** The coverage audit oracle-gated with a PLANTED half-append: build
+    * the pair from the corpus, then land 5 new vectors in BQ only —
+    * exactly the state a crash between the two tier appends leaves
+    * (which [[appendCascadeDurable]] exists to heal; the drill in
+    * CascadePairSpec crashes for real and resumes). The audit must
+    * report the full corpus in both tiers, the 5 orphans as bq_only,
+    * and nothing sq8-only; the oracle recomputes all three counts from
+    * the corpus by construction.
+    */
   val cascadeCoverage = Q(
     "v_cascade_coverage",
     (s, d) => {

@@ -54,10 +54,9 @@ import org.apache.spark.sql.functions.col
   * tombstone key, rewrite components), and only the declaration's
   * protocol operations move a manifest: [[StoredIndex.build]] (epoch-0
   * components plus the empty tombstone epoch, then the initial
-  * [[commit]]), [[StoredIndex.nextEpoch]] / [[StoredIndex.advanceTo]]
-  * (stage, then [[advance]]), [[StoredIndex.compact]] /
-  * [[StoredIndex.rebase]] (stage, re-check the single writer, commit
-  * with floor = epoch), and [[StoredIndex.resolved]] (tombstones under
+  * [[commit]]), [[StoredIndex.nextEpoch]] (stage, then [[advance]]),
+  * [[StoredIndex.compact]] / [[StoredIndex.rebase]] (stage, re-check
+  * the single writer, commit with floor = epoch), and [[StoredIndex.resolved]] (tombstones under
   * epoch precedence). Family code supplies encoders, merges and
   * give-backs; this object supplies the manifest, the readers, the pin
   * ledger and the janitor.

@@ -28,20 +28,20 @@ object Scratch {
   /** tmpfs is RAM: preferring /dev/shm for a layout clone or index
     * fleet bigger than the free space would eat the memory the
     * executors need (or OOM the box outright). The tmpfs root is
-    * therefore taken only when its USABLE space clears a byte budget —
-    * default 4 GiB, overridable via SPARK_GRAFT_SCRATCH_MIN_FREE_MB —
-    * else the root falls back to disk tmp. The budget is a floor on
-    * headroom at JVM start, not a quota: a run that writes more than
-    * free-at-start still fails like any full disk would.
+    * therefore taken only when its USABLE space clears
+    * [[minFreeBytes]], else the root falls back to disk tmp
+    * (SPARK_GRAFT_SCRATCH_DIR forces a disk root outright). The budget
+    * is a floor on headroom at JVM start, not a quota: a run that
+    * writes more than free-at-start still fails like any full disk
+    * would.
     */
   private[sources] def shmEligible(shm: Path, minFreeBytes: Long): Boolean =
     Files.isDirectory(shm) && Files.isWritable(shm) &&
       (try shm.toFile.getUsableSpace >= minFreeBytes
       catch { case _: Exception => false })
 
-  private[sources] def minFreeBytes: Long =
-    sys.env.get("SPARK_GRAFT_SCRATCH_MIN_FREE_MB")
-      .flatMap(_.toLongOption).getOrElse(4096L) * (1L << 20)
+  /** The tmpfs headroom budget: 4 GiB. */
+  private[sources] val minFreeBytes: Long = 4096L * (1L << 20)
 
   private lazy val root: Path = {
     val base = sys.env.get("SPARK_GRAFT_SCRATCH_DIR")
@@ -71,8 +71,8 @@ object Scratch {
   def dir(prefix: String): String =
     Files.createTempDirectory(root, prefix).toString
 
-  /** Best-effort recursive delete, exposed for per-batch ledger
-    * pruning (the streaming ingest's settled batch roots).
+  /** Best-effort recursive delete of a scratch directory, exposed for
+    * probes that free their scratch between trials (`ProfScratch`).
     */
   private[graft] def deleteRecursively(p: Path): Unit = deleteQuietly(p)
 

@@ -56,9 +56,6 @@ final case class StoredIndex(
   /** The committed head epoch. */
   def head(path: String): Long = state(path).epoch
 
-  /** The epoch the next append or forget stages into. */
-  def pending(path: String): Long = head(path) + 1L
-
   private def run(tasks: Seq[Task]): Unit =
     if (sequential) tasks.foreach(_._2()) else Overlap.run(tasks: _*)
 
@@ -83,21 +80,16 @@ final case class StoredIndex(
     IndexManifest.commit(path, 0L, fmt = format)
   }
 
-  /** Stage epoch `e` and advance the manifest to it — the commit of an
-    * append or forget whose target epoch the caller already fixed (a
-    * ledgered stream batch). [[IndexManifest.advance]] re-checks that
-    * the committed epoch is still e-1 at the flip.
+  /** One append or forget: stage the next epoch, then advance —
+    * [[IndexManifest.advance]] re-checks that the committed epoch is
+    * still e-1 at the flip. Crash before the flip = an invisible orphan
+    * stage a retry overwrites.
     */
-  def advanceTo(path: String, e: Long)(stage: Long => Unit): Unit = {
+  def nextEpoch(path: String)(stage: Long => Unit): Unit = {
+    val e = head(path) + 1L
     stage(e)
     IndexManifest.advance(path, e, format)
   }
-
-  /** One append or forget: stage the next epoch, then advance. Crash
-    * before the flip = an invisible orphan stage a retry overwrites.
-    */
-  def nextEpoch(path: String)(stage: Long => Unit): Unit =
-    advanceTo(path, pending(path))(stage)
 
   /** Write epoch `e`'s tombstones: the distinct ids of `ids`' key column. */
   def stageTombstones(ids: DataFrame, path: String, e: Long): Unit = {

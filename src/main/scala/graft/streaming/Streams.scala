@@ -7,6 +7,7 @@ import org.apache.spark.sql.Row
 
 import graft.model.UserBehavior
 import graft.operators.Windowed
+import graft.sources.EpochLedger
 
 /** Structured-Streaming wiring for the windowed statistics (SURVEY §2.4
   * W1-W8, §2.6 T1-T3, §2.9 K8).
@@ -1060,72 +1061,27 @@ object Streams {
   // orchestrator: deletion requests (GDPR Art. 17) arrive as a stream
   // of (doc_id[, text]) rows, and each micro-batch fans out to the
   // stored-index fleet. foreachBatch's serialized execution IS the
-  // indexes' single-writer contract.
-  //
-  // The replay hazard, solved with a WRITE-AHEAD EPOCH LEDGER: a crash
-  // after some families' manifests advanced but before the batch's
-  // offsets committed makes Structured Streaming REPLAY the batch, and
-  // a blind re-run would double-subtract the already-advanced families
-  // (every forget path's documented ledger discipline). So before any
-  // forget runs, the batch's pre-call epoch snapshot is persisted
-  // (atomic tmp+rename, keyed by batchId); a replayed batch finds its
-  // ledger entry and erases only `targets.remaining(snapshot)` — the
-  // same resume protocol Erasure documents, made durable per batch.
-  // Net: exactly-once erasure per request batch, end to end.
+  // indexes' single-writer contract. A crash after some families
+  // advanced but before the offsets committed REPLAYS the batch, and a
+  // blind re-run would double-subtract, so each batch runs under its
+  // [[graft.sources.EpochLedger]] entry `batch-N.ledger`.
   // ---------------------------------------------------------------------
 
-  /** Read the batch's persisted pre-call epoch snapshot, or take and
-    * persist one (atomic tmp+rename keyed by batchId) — the
-    * write-ahead half of the per-batch ledger both erasure grains
-    * share.
-    */
-  private def batchEpochSnapshot(ordered: Seq[(String, String)],
-      ledgerDir: String, batchId: Long): Map[String, Long] = {
-    import graft.sources.LedgerIO
-    val entry = LedgerIO.child(ledgerDir, s"batch-$batchId.ledger")
-    LedgerIO.readIfExists(entry) match {
-      case Some(text) =>
-        text.linesIterator.filter(_.nonEmpty).map { ln =>
-          val Array(tag, e) = ln.split('=')
-          tag -> e.toLong
-        }.toMap
-      case None =>
-        val snap = graft.queries.Erasure.committedEpochs(ordered)
-        LedgerIO.writeAtomic(entry, s".batch-$batchId.tmp",
-          snap.map { case (t, e) => s"$t=$e" }.mkString("", "\n", "\n"))
-        snap
-    }
-  }
-
-  /** Prune settled ledger entries: micro-batches execute serially, so
-    * by the time batch N runs, batch N-1's offsets have committed and
-    * its entry can never be consulted again — without this the ledger
-    * grows one file per micro-batch for the stream's lifetime.
-    */
-  private def pruneSettledBatches(ledgerDir: String, batchId: Long): Unit = {
-    import graft.sources.LedgerIO
-    LedgerIO.listStatus(LedgerIO.root(ledgerDir)).foreach { st =>
-      val n = st.getPath.getName
-      if (n.startsWith("batch-") && n.endsWith(".ledger") &&
-          n.stripPrefix("batch-").stripSuffix(".ledger").toLongOption.exists(_ < batchId))
-        LedgerIO.deleteIfExists(st.getPath)
-    }
-  }
-
-  /** Apply one erasure request batch under the write-ahead ledger —
-    * the foreachBatch body, exposed for the replay drill.
+  /** Apply one erasure request batch under its ledger entry — the
+    * foreachBatch body, exposed for the replay drill.
     */
   private[graft] def applyErasureBatch(
       batch: DataFrame, targets: graft.queries.Erasure.DocTargets,
       ledgerDir: String, batchId: Long): Unit = {
-    val snapshot = batchEpochSnapshot(targets.ordered, ledgerDir, batchId)
-    val remaining = targets.remaining(snapshot)
-    if (remaining.ordered.nonEmpty && !batch.isEmpty)
-      graft.queries.Erasure.forgetDocs(batch, remaining)
-    pruneSettledBatches(ledgerDir, batchId)
+    import graft.queries.Erasure
+    val todo = EpochLedger.pending(EpochLedger.batch(ledgerDir, batchId, ".ledger"),
+      "doc", EpochLedger.legs(targets.ordered))
+    if (todo.nonEmpty && !batch.isEmpty)
+      Erasure.runDocFamilies(batch, todo)
+    EpochLedger.prune(ledgerDir, batchId)
   }
 
-  /** The USER-GRAIN batch applier — same ledger discipline over
+  /** The USER-GRAIN batch applier — same ledger over
     * [[graft.queries.Erasure.forgetUsers]]; `events` supplies the
     * forgotten users' event slice when the transition graph is
     * targeted (forgetUsers semi-joins it to the batch's users).
@@ -1133,12 +1089,13 @@ object Streams {
   private[graft] def applyUserErasureBatch(
       batch: DataFrame, targets: graft.queries.Erasure.UserTargets,
       events: Option[DataFrame], ledgerDir: String, batchId: Long): Unit = {
-    val snapshot = batchEpochSnapshot(targets.ordered, ledgerDir, batchId)
-    val remaining = targets.remaining(snapshot)
-    if (remaining.ordered.nonEmpty && !batch.isEmpty)
-      graft.queries.Erasure.forgetUsers(batch, remaining,
-        userEvs = if (remaining.transition.nonEmpty) events else None)
-    pruneSettledBatches(ledgerDir, batchId)
+    import graft.queries.Erasure
+    val todo = EpochLedger.pending(EpochLedger.batch(ledgerDir, batchId, ".ledger"),
+      "user", EpochLedger.legs(targets.ordered))
+    if (todo.nonEmpty && !batch.isEmpty)
+      Erasure.runUserFamilies(batch, todo,
+        userEvs = if (todo.exists(_.tag == "transition")) events else None)
+    EpochLedger.prune(ledgerDir, batchId)
   }
 
   /** Start the standing erasure queue over a streaming frame of
@@ -1148,13 +1105,10 @@ object Streams {
     * double-subtracting. Settled ledger entries are pruned as batches
     * commit, so the ledger holds at most the in-flight batch.
     *
-    * Single-writer caveat (inherited from [[graft.queries.Erasure]]'s
-    * resume protocol): "epoch advanced since the snapshot" is read as
-    * "this family's erasure committed". An OUT-OF-BAND writer landing
+    * The stream must be the index fleet's only writer while it runs,
+    * exactly the IndexManifest contract: an OUT-OF-BAND writer landing
     * between a crash and the replay (e.g. a maintenance compaction)
-    * also advances the epoch and would make the replay silently skip
-    * that family for the batch — the stream must be the index fleet's
-    * only writer while it runs, exactly the IndexManifest contract.
+    * fails the replay loudly instead of letting it skip that family.
     */
   def erasureStream(
       requests: DataFrame, targets: graft.queries.Erasure.DocTargets,
@@ -1169,8 +1123,8 @@ object Streams {
   /** The standing erasure queue at USER grain — the grain GDPR
     * requests actually arrive at: each micro-batch of (user_id) rows
     * fans out to the user-grain fleet (co-occurrence, transition
-    * graph, the zone-mapped event table) under the same write-ahead
-    * epoch ledger and single-writer caveat as [[erasureStream]].
+    * graph, the zone-mapped event table) under the same ledger and
+    * single-writer contract as [[erasureStream]].
     * `events` is the source log the transition subtraction reads its
     * slices from (bound at construction; it must cover the forgotten
     * users' complete history — the [[graft.queries.Erasure
@@ -1191,67 +1145,16 @@ object Streams {
       .start()
   }
 
-  // ---------------------------------------------------------------------
-  // Streaming ingest into the epoch-versioned event table — the twin
-  // every stored-index family already has, for the table itself: each
-  // micro-batch of events becomes one committed table epoch (z-sorted
-  // range files + zone-map rows + manifest advance). The replay hazard
-  // is the appender's documented one: appendEventTable is idempotent
-  // only for stages that crashed BEFORE the manifest flip — a replayed
-  // COMMITTED batch would fold the same rows in twice. Solved with the
-  // same write-ahead epoch ledger as erasureStream: before staging, the
-  // batch's TARGET EPOCH persists keyed by batchId (atomic tmp+rename);
-  // a replayed batch whose ledgered epoch is already committed is a
-  // no-op, one whose stage crashed restages into the SAME epoch
-  // (overwrite semantics) and commits. Net: exactly-once table ingest.
-  // Same single-writer caveat as erasureStream: an out-of-band writer
-  // advancing the manifest between crash and replay would make the
-  // replay read its batch as already-folded.
-  // ---------------------------------------------------------------------
-
-  /** Fold one ingest batch under the write-ahead epoch ledger — the
-    * foreachBatch body, exposed for the replay drill.
+  /** Fold one ingest batch into the event table as one epoch — the
+    * foreachBatch body, exposed for the replay drill. The single-family
+    * ingest body over [[graft.sources.StoredIndex.Layout]]: a replayed
+    * committed batch would fold its rows in twice.
     */
   private[graft] def applyEventTableBatch(
       batch: DataFrame, path: String, ledgerDir: String, batchId: Long,
-      nFiles: Int = 4): Unit = {
-    import graft.sources.{LedgerIO, StoredIndex}
-    val table = StoredIndex.Layout
-    val entry = LedgerIO.child(ledgerDir, s"batch-$batchId.ledger")
-    val e: Long = LedgerIO.readIfExists(entry) match {
-      case Some(text) => text.trim.toLong
-      case None =>
-        val next = table.pending(path)
-        LedgerIO.writeAtomic(entry, s".batch-$batchId.tmp", s"$next\n")
-        next
-    }
-    val committed = table.head(path)
-    if (committed == e - 1L)
-      // the advance re-checks committed == e-1 at the flip, so a foreign
-      // writer racing the stage still fails loudly there
-      table.advanceTo(path, e)(graft.queries.LayoutOps.stageTableEpoch(batch, path, _, nFiles))
-    else if (committed < e - 1L)
-      // the table went BACKWARDS under the stream (rebuilt out-of-band):
-      // diagnose it by name BEFORE staging a full epoch that advance()
-      // would only reject afterwards with the generic guard
-      throw new java.util.ConcurrentModificationException(
-        s"single-writer violation on the event-table ingest (batch $batchId): " +
-          s"committed epoch $committed is behind this batch's ledgered target $e - " +
-          "the table was rebuilt underneath the stream; refusing to stage onto it")
-    else if (committed > e)
-      // ledgered target epoch already SUPERSEDED: only a foreign writer
-      // can be ahead of this stream's own one-epoch-per-batch arithmetic
-      // — a silent no-op here would drop the batch (the erasure-stream
-      // caveat made loud, same rule as applyIndexIngestBatch)
-      throw new java.util.ConcurrentModificationException(
-        s"single-writer violation on the event-table ingest (batch $batchId): " +
-          s"committed epoch $committed is past this batch's ledgered target $e - " +
-          "a foreign writer advanced the table mid-stream; refusing to skip")
-    // committed == e: replay of an already-committed fold — exactly-once no-op
-    // prune settled entries (batches run serially; earlier ids can
-    // never replay) — the ledger holds at most the in-flight batch
-    pruneSettledBatches(ledgerDir, batchId)
-  }
+      nFiles: Int = 4): Unit =
+    applyIngestBatch(batch, EpochLedger.Leg("table", path),
+      graft.queries.LayoutOps.appendEventTable(_, path, nFiles), ledgerDir, batchId, ".ledger")
 
   /** ONLINE ANN SERVING — the request-side twin of the stored-index
     * cascade (`v_cascade_from_index` is the oracle-gated batch special
@@ -1457,29 +1360,16 @@ object Streams {
   // ---------------------------------------------------------------------
   // Standing cascade ingest — the third leg of the stored cascade's
   // streaming lifecycle (serve: cascadeServeStream; forget:
-  // erasureStream/userErasureStream; this: append). Vector deltas
-  // arrive as a stream of (vec_id, embedding) rows and each
-  // micro-batch lands in BOTH tiers through [[graft.queries.VectorOps
-  // .appendCascadeDurable]] under a PER-BATCH intent root, so the two
-  // replay hazards compose into the existing protocols instead of
-  // needing a new one:
-  //   - replay of a LANDED batch (crash after the body ran but before
-  //     the source offsets committed): the batch root's
-  //     `_completed.ledger` — the marker the durable append already
-  //     leaves behind — short-circuits the replay to a no-op. A blind
-  //     re-append would violate the appenders' new-ids-only contract
-  //     and fan duplicate candidates into the cascade's tier 2.
-  //   - crash INSIDE the pair (between the BQ and SQ8 tier appends):
-  //     the batch root's pending `_intent.ledger` routes the replay to
-  //     [[graft.queries.VectorOps.resumeAppendCascade]], which heals
-  //     the half-append from disk alone (epoch-snapshot rule) and
-  //     restores the coverage contract.
-  // foreachBatch's serialized execution is the single-writer contract
-  // both manifests require; settled batch roots (strictly below the
-  // running batchId, completed marker present) are pruned so ledger
-  // storage is bounded by one in-flight batch, not stream lifetime.
-  // Caller contract unchanged from the batch appenders: new vec_ids
-  // only, across the stream's lifetime.
+  // erasureStream/userErasureStream; this: append). Each micro-batch of
+  // (vec_id, embedding) deltas lands in BOTH tiers through
+  // [[graft.queries.VectorOps.appendCascadeDurable]] under a PER-BATCH
+  // intent root `batch-N`, so the replay hazards compose into the
+  // paired append's own protocol: a completed root makes the replay a
+  // no-op (a blind re-append would violate the appenders' new-ids-only
+  // contract), and a pending intent routes it to
+  // [[graft.queries.VectorOps.resumeAppendCascade]]. Caller contract
+  // unchanged from the batch appenders: new vec_ids only, across the
+  // stream's lifetime.
   // ---------------------------------------------------------------------
 
   /** Apply one vector-delta batch under the per-batch intent root —
@@ -1505,17 +1395,16 @@ object Streams {
       batch: DataFrame, bqPath: String, sq8Path: String,
       ledgerRoot: String, batchId: Long,
       failAfter: Int = Int.MaxValue, dedupIds: Boolean = false): Unit = {
-    import graft.sources.LedgerIO
     // the root is created by the durable append itself (delta staging);
     // an empty batch leaves no root at all, so nothing lingers
-    val root = LedgerIO.child(ledgerRoot, s"batch-$batchId")
-    if (LedgerIO.exists(new org.apache.hadoop.fs.Path(root, "_completed.ledger"))) ()
-    else if (LedgerIO.exists(new org.apache.hadoop.fs.Path(root, "_intent.ledger")))
-      graft.queries.VectorOps.resumeAppendCascade(batch.sparkSession, root.toString)
+    val root = EpochLedger.batch(ledgerRoot, batchId).toString
+    if (EpochLedger.isCompleted(root)) ()
+    else if (EpochLedger.isOpen(root))
+      graft.queries.VectorOps.resumeAppendCascade(batch.sparkSession, root)
     else if (!dedupIds) {
       if (!batch.isEmpty)
         graft.queries.VectorOps.appendCascadeDurable(
-          batch, bqPath, sq8Path, root.toString, failAfter)
+          batch, bqPath, sq8Path, root, failAfter)
     } else {
       val s = batch.sparkSession
       val stored = graft.queries.VectorOps.storedBqWords(s, bqPath)
@@ -1529,27 +1418,10 @@ object Streams {
       try {
         if (delta.count() > 0L)
           graft.queries.VectorOps.appendCascadeDurable(
-            delta, bqPath, sq8Path, root.toString, failAfter)
+            delta, bqPath, sq8Path, root, failAfter)
       } finally delta.unpersist()
     }
-    pruneSettledIngest(ledgerRoot, batchId)
-  }
-
-  /** Prune settled ingest batch roots: micro-batches execute serially,
-    * so by the time batch N runs, every completed root below N has
-    * committed offsets and can never be consulted again. Roots without
-    * the completed marker are left alone (they should not exist below
-    * the running batch; conservatism costs one directory).
-    */
-  private def pruneSettledIngest(ledgerRoot: String, batchId: Long): Unit = {
-    import graft.sources.LedgerIO
-    LedgerIO.listStatus(LedgerIO.root(ledgerRoot)).foreach { st =>
-      val n = st.getPath.getName
-      if (n.startsWith("batch-") &&
-          n.stripPrefix("batch-").toLongOption.exists(_ < batchId) &&
-          LedgerIO.exists(new org.apache.hadoop.fs.Path(st.getPath, "_completed.ledger")))
-        LedgerIO.deleteRecursive(st.getPath)
-    }
+    EpochLedger.prune(ledgerRoot, batchId)
   }
 
   /** Start the standing cascade ingest over a streaming frame of
@@ -1733,90 +1605,37 @@ object Streams {
       .select(explode(col("sample")).as("s"))
       .select(col("s.key").as("doc_id"), (-col("s.cnt")).as("draw_key"))
 
-  // ---------------------------------------------------------------------
-  // Generic single-family index ingest — the cascade stream's
-  // exactly-once discipline for EVERY other stored family (postings,
-  // LSH, IVF-PQ, BQ, SQ8, cooccur: anything with an appender over the
-  // manifest). A single family needs no paired-intent protocol; the
-  // manifest itself is the ledger, and one persisted number per batch
-  // closes the replay hole: the batch's PRE-append committed epoch is
-  // written (tmp+rename, keyed by batchId) BEFORE the append runs, so
-  //   - replay after the append committed: committed epoch > marker →
-  //     skip (a blind re-append would violate new-ids-only and
-  //     double-count stats);
-  //   - replay after a crash mid-append (epoch staged, manifest not
-  //     advanced): committed epoch == marker → re-run; the appenders
-  //     stage with overwrite into their epoch directory, so re-staging
-  //     the same epoch is idempotent;
-  //   - replay before the marker: nothing happened, runs fresh.
-  // Markers below the running batchId prune each batch (serialized
-  // micro-batch execution — the erasure streams' argument).
-  // ---------------------------------------------------------------------
-
-  /** Read the batch's persisted pre-append epoch, or take and persist
-    * it (atomic tmp+rename keyed by batchId).
-    */
-  private def batchPreEpoch(ledgerRoot: String, batchId: Long,
-      now: => Long): Long = {
-    import graft.sources.LedgerIO
-    val f = LedgerIO.child(ledgerRoot, s"batch-$batchId.epoch")
-    LedgerIO.readIfExists(f) match {
-      case Some(text) => text.trim.toLong
-      case None =>
-        val e = now
-        LedgerIO.writeAtomic(f, s".batch-$batchId.tmp", s"$e\n")
-        e
-    }
-  }
-
-  private def pruneSettledEpochMarkers(ledgerRoot: String, batchId: Long): Unit = {
-    import graft.sources.LedgerIO
-    LedgerIO.listStatus(LedgerIO.root(ledgerRoot)).foreach { st =>
-      val n = st.getPath.getName
-      if (n.startsWith("batch-") && n.endsWith(".epoch") &&
-          n.stripPrefix("batch-").stripSuffix(".epoch")
-            .toLongOption.exists(_ < batchId))
-        LedgerIO.deleteIfExists(st.getPath)
-    }
-  }
-
   /** Apply one delta batch to a single stored family — the foreachBatch
     * body, exposed for the replay/crash drills. `append` is the
     * family's appender partially applied to its root (e.g.
     * `SearchOps.appendPostingsIndex(_, path)`); `committedEpoch` reads
-    * the same root with the family's format pin.
+    * the same root with the family's format pin. The batch's ledger
+    * entry is `batch-N.epoch`; its one leg, `index`, records no root
+    * path, since the stream is given only the epoch reader.
     */
   private[graft] def applyIndexIngestBatch(
       batch: DataFrame, committedEpoch: () => Long, append: DataFrame => Unit,
-      ledgerRoot: String, batchId: Long): Unit = {
-    // the marker persists even for an empty batch: emptiness is a
-    // property of the replayed data, not of this run, so the cheap
-    // uniform write keeps the protocol one-shaped
-    val pre = batchPreEpoch(ledgerRoot, batchId, committedEpoch())
-    val committed = committedEpoch()
-    if (committed == pre) { if (!batch.isEmpty) append(batch) }
-    else if (committed != pre + 1L)
-      // This stream's own append advances the epoch by EXACTLY one, so
-      // committed == pre+1 is the legitimate replay-after-commit no-op
-      // and anything else is provably a FOREIGN writer (or a rebuild)
-      // that took the manifest while this stream owned it. Skipping the
-      // batch here would be silent data loss — the replay protocol's
-      // epoch arithmetic no longer describes reality — so fail loudly
-      // and name the foreign epoch; the operator restarts the stream
-      // against the new committed state once ownership is resolved.
-      throw new java.util.ConcurrentModificationException(
-        s"single-writer violation on the ingest stream (batch $batchId): " +
-          s"committed epoch $committed vs this batch's pre-append marker $pre - " +
-          (if (committed < pre) "the index went BACKWARDS (rebuilt underneath the stream)"
-           else s"a foreign writer advanced the index to epoch $committed") +
-          "; refusing to guess which appends are safe (zero silent skips)")
-    // committed == pre + 1: this batch's own append already committed - replay no-op
-    pruneSettledEpochMarkers(ledgerRoot, batchId)
+      ledgerRoot: String, batchId: Long): Unit =
+    applyIngestBatch(batch, EpochLedger.Leg("index", "(caller-bound root)", committedEpoch),
+      append, ledgerRoot, batchId, ".epoch")
+
+  /** The single-family ingest body: one leg under the batch's ledger
+    * entry `batch-N<ext>`, at most one committed epoch per batch. The
+    * entry persists even for an empty batch (emptiness is a property of
+    * the replayed data, not of this run), and an empty batch commits no
+    * epoch.
+    */
+  private def applyIngestBatch(batch: DataFrame, leg: EpochLedger.Leg,
+      append: DataFrame => Unit, ledgerDir: String, batchId: Long, ext: String): Unit = {
+    val entry = EpochLedger.batch(ledgerDir, batchId, ext)
+    if (EpochLedger.pending(entry, "ingest", Seq(leg)).nonEmpty && !batch.isEmpty)
+      append(batch)
+    EpochLedger.prune(ledgerDir, batchId)
   }
 
   /** Start a standing ingest into ONE stored index family: each
     * micro-batch becomes (at most) one committed epoch via the family's
-    * own appender, exactly-once under the per-batch epoch marker.
+    * own appender, exactly-once under the per-batch ledger entry.
     * Callers supply the appender and the epoch reader bound to the same
     * root, e.g. for the positional postings index:
     * {{{
