@@ -69,9 +69,12 @@ object GraftSession {
     *  - RocksDB state store: the default HDFS-backed provider keeps every
     *    key's state in executor heap — fine for the reference's 480k-row
     *    replays, fatal for a 100 TB/day dedup or sessionization window
-    *    whose live state exceeds memory. RocksDB spills to local disk,
-    *    keeps changelogs in the checkpoint, and bounds heap via block
-    *    cache (the provider ships with Spark, no extra dependency).
+    *    whose live state exceeds memory. RocksDB spills to local disk
+    *    and bounds heap via block cache (the provider ships with Spark,
+    *    no extra dependency). Only the provider class is set: changelog
+    *    checkpointing keeps Spark's default (off in Spark 4.1.2), so
+    *    every state-store commit uploads a RocksDB snapshot (its new SST
+    *    files plus metadata) to the checkpoint, not a changelog.
     *  - unsaferow format check stays on (detects state-schema drift across
     *    restarts).
     */

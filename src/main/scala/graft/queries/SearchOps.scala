@@ -33,7 +33,8 @@ object SearchOps {
     */
   private def probedPostings(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    // NOT fanned (r21 measured negative, ProfTok): plain tokenize is
+    // NOT fanned (r21 measured negative, 0.75x,
+    // SCALING.md ("Round-21 (optimization round 1)")): plain tokenize is
     // too cheap to pay the fan-out exchange for — unlike the shingle
     // pipelines, where the same move wins
     docs(s, d)
@@ -178,10 +179,11 @@ object SearchOps {
   private def bm25Scored(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     val (tl, n) = corpusStats(s, d)
-    // deliberately NOT checkpointed (r21 measured negative, ProfTok
-    // 0.75x): the two consumers' branches execute as CONCURRENT stages
-    // of one job, so the recompute is cheaper than the materialization
-    // barrier that would serialize them
+    // deliberately NOT checkpointed (r21 measured negative, 0.75x,
+    // SCALING.md ("Round-21 (optimization round 1)")): the two
+    // consumers' branches execute as CONCURRENT stages of one job, so
+    // the recompute is cheaper than the materialization barrier that
+    // would serialize them
     val postings = probedPostingsWithLen(s, d)
     val dfT = postings.groupBy($"t").agg(count(lit(1)).as("df"))
       .withColumn("idf_ppm", expr(s"(${n}L * 1000000L) div df"))
@@ -711,14 +713,16 @@ object SearchOps {
     // the four epoch-0 components are independent writes under one
     // commit — overlapped so the small-file tails back-fill (guide §2.6;
     // the postings subtree recomputing concurrently in two of them is
-    // the barrier-free trade the r21 ProfTok probe said to prefer over
-    // a checkpoint here). Each task BUILDS ITS OWN derived plan: two
-    // concurrent write commands must never share a live plan instance
-    // at or above an exchange — sharing one corrupts results under AQE
-    // (ProfRace3: shared-instance writes diverge, per-task copies are
-    // clean over 40 trials; eager-checkpointed ExistingRDD frames are
-    // exempt, having no exchange to share). The empty tombstone epoch
-    // joins them from the declaration.
+    // the barrier-free trade the r21 light-token probe said to prefer
+    // over a checkpoint here,
+    // SCALING.md ("Round-21 (optimization round 1)")). Each task BUILDS
+    // ITS OWN derived plan: two concurrent write commands must never
+    // share a live plan instance at or above an exchange — sharing one
+    // corrupts results under AQE (ProfRace3: shared-instance writes
+    // diverge, per-task copies are clean over 40 trials;
+    // eager-checkpointed ExistingRDD frames are exempt, having no
+    // exchange to share; SCALING.md ("Round-22 (optimization round 2)")).
+    // The empty tombstone epoch joins them from the declaration.
     StoredIndex.Postings.build(s, path)(
       "postings" -> (() =>
         StoredIndex.Postings.writeMain(positionalPostings(docsDf), path, 0L)),

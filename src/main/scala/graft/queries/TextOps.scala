@@ -1029,9 +1029,10 @@ object TextOps {
     // the materializing action, so each round runs ONE job (sum computes
     // the round's plan and persists the checkpoint blocks as a side
     // effect) instead of two (eager materialization + separate probe).
-    // The round-14 ProfCC probe showed CC cost is (rounds x jobs/round x
-    // local job floor), not shuffle width — halving jobs/round is the
-    // lever that probe said partition count wasn't. The probe aggregates
+    // The round-14 partition-count probe showed CC cost is (rounds x
+    // jobs/round x local job floor), not shuffle width — halving
+    // jobs/round is the lever that probe said partition count wasn't
+    // (SCALING.md ("CC partition-count probe")). The probe aggregates
     // every partition, so the checkpoint is always complete before the
     // next round reads it.
     val persist: DataFrame => DataFrame = checkpointDir match {
@@ -2502,10 +2503,12 @@ object TextOps {
     val s0 = base.sparkSession
     // independent epoch-0 components under one commit, overlapped
     // (guide §2.6); the shingle subtree recomputes concurrently in both
-    // band writes — the barrier-free trade (checkpoint rule, ProfTok).
+    // band writes — the barrier-free trade (the checkpoint rule,
+    // SCALING.md ("Round-21 (optimization round 1)")).
     // Each task builds ITS OWN plan: concurrent write commands must not
     // share a live plan instance at or above an exchange (the ProfRace3
-    // AQE corruption — see SearchOps.writePostingsIndex).
+    // AQE corruption, SCALING.md ("Round-22 (optimization round 2)") —
+    // see SearchOps.writePostingsIndex).
     def rows() = minhashBandRows(shinglesOfDf(base.select(col("doc_id"), col("text"))))
     StoredIndex.Lsh.build(s0, path)(
       "bands" -> (() =>
@@ -3101,10 +3104,11 @@ object TextOps {
   private[queries] def unigramLmOn(docsDf: DataFrame): DataFrame = {
     val s = docsDf.sparkSession
     import s.implicits._
-    // deliberately NOT checkpointed (r21 measured negative, ProfTok
-    // 0.86x): tokRows' and cnts' consumers run as concurrent stages of
-    // one job, and plain tokenize is cheap — the materialization
-    // barrier cost more than the recompute it saved
+    // deliberately NOT checkpointed (r21 measured negative, 0.86x,
+    // SCALING.md ("Round-21 (optimization round 1)")): tokRows' and
+    // cnts' consumers run as concurrent stages of one job, and plain
+    // tokenize is cheap — the materialization barrier cost more than
+    // the recompute it saved
     val tokRows = docsDf.select($"doc_id", explode(toks).as("token"))
     val cnts = tokRows.groupBy($"token").agg(count(lit(1)).as("cnt"))
     val total = cnts.agg(sum($"cnt").cast("long").as("n_total"))

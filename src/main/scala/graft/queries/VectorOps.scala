@@ -241,11 +241,11 @@ object VectorOps {
     *
     * Checkpoint discipline, measured: the EAGER checkpoints here (pool,
     * pairs, per-round selected) are deliberately kept — the CC-style
-    * all-lazy form was paired-A/B'd at 1.04x (ProfMmr, r22; equivalence
-    * diff 0), below the adoption gate. The loop-invariant pool/pairs
-    * frames are scanned once either way; the greedy rounds are
-    * query-sized, so the extra materialization jobs are already at the
-    * local job floor.
+    * all-lazy form was paired-A/B'd at 1.04x (r22, equivalence diff 0;
+    * SCALING.md ("Round-22 (optimization round 2)")), below the adoption
+    * gate. The loop-invariant pool/pairs frames are scanned once either
+    * way; the greedy rounds are query-sized, so the extra
+    * materialization jobs are already at the local job floor.
     */
   private[queries] def mmrSelect(pool: DataFrame, pairs: DataFrame): DataFrame = {
     val wSel = Window.partitionBy(col("query_id")).orderBy(col("mmr").desc, col("cand_id"))
@@ -1108,10 +1108,11 @@ object VectorOps {
         micros(dotd("embedding", "embedding") + dotd("c_emb", "c_emb")
           - lit(2.0) * dotd("embedding", "c_emb")))
       .withColumn("rk", row_number().over(wAssign))
-    // deliberately NOT checkpointed (r21 paired A/B 0.81x, ProfIvfRanked):
-    // the assigned/probes branches execute as concurrent stages of one
-    // job, so the double assignment pass is cheaper than a
-    // materialization barrier that would serialize the pipeline
+    // deliberately NOT checkpointed (r21 paired A/B 0.81x,
+    // SCALING.md ("Round-21 (optimization round 1)")): the
+    // assigned/probes branches execute as concurrent stages of one job,
+    // so the double assignment pass is cheaper than a materialization
+    // barrier that would serialize the pipeline
     val assigned = dists.filter($"rk" === 1).select($"vec_id", $"cell", $"embedding")
     val probes = dists
       .filter($"vec_id" >= nCells && $"vec_id" < nCells + nQueries && $"rk" <= nProbe)
@@ -1482,8 +1483,8 @@ object VectorOps {
     // join): the branches execute as concurrent stages of the CC
     // probe's one job, so the rescans are nearly free while a
     // materialization barrier serializes them — paired A/B 1.02x
-    // (ProfMM22, r22; the r19 eager-persist probe measured 0.98x),
-    // below the 1.15x adoption gate.
+    // (r22, SCALING.md ("Round-22 (optimization round 2)"); the r19
+    // eager-persist probe measured 0.98x), below the 1.15x adoption gate.
     val s = docsDf.sparkSession
     import s.implicits._
     val exactEdges = docsDf

@@ -9,10 +9,13 @@ package graft.sources
   * writers (components of ONE epoch, manifest commit strictly after all
   * of them land) and the stored-fleet drills (independent roots).
   *
-  * `-Dgraft.overlap.sequential=true` (or SPARK_GRAFT_OVERLAP=off) runs
-  * the tasks in declaration order on the caller thread — the paired-A/B
-  * switch (ProfFleet) and the escape hatch for a driver where
-  * concurrent root builds would contend with higher-priority jobs.
+  * The system property `graft.overlap.sequential=true` (`-D` on the JVM,
+  * or `System.setProperty` inside it) runs the tasks in declaration
+  * order on the caller thread — the switch the paired A/Bs measured
+  * against (2.23x on the cert-fleet lifecycle,
+  * SCALING.md ("Round-22 (optimization round 2)")) and the escape hatch
+  * for a driver where concurrent root builds would contend with
+  * higher-priority jobs.
   *
   * Failure semantics: the first failing task's exception propagates,
   * but only after every sibling has STOPPED. The siblings' Spark jobs
@@ -28,8 +31,7 @@ package graft.sources
 private[graft] object Overlap {
 
   private def sequentialMode: Boolean =
-    sys.props.get("graft.overlap.sequential").contains("true") ||
-      sys.env.get("SPARK_GRAFT_OVERLAP").contains("off")
+    sys.props.get("graft.overlap.sequential").contains("true")
 
   def run(tasks: (String, () => Unit)*): Unit = {
     if (tasks.size <= 1 || sequentialMode) { tasks.foreach(_._2()); return }

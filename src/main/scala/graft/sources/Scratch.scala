@@ -71,11 +71,6 @@ object Scratch {
   def dir(prefix: String): String =
     Files.createTempDirectory(root, prefix).toString
 
-  /** Best-effort recursive delete of a scratch directory, exposed for
-    * probes that free their scratch between trials (`ProfScratch`).
-    */
-  private[graft] def deleteRecursively(p: Path): Unit = deleteQuietly(p)
-
   private val memo = new java.util.concurrent.ConcurrentHashMap[String, String]()
 
   /** Per-JVM memoized scratch fixture: `build` runs once per `key`

@@ -24,7 +24,8 @@ import org.apache.spark.sql.functions.{broadcast, col, max}
   *     declaration order on the caller thread instead of overlapped.
   *     SCD2's latest/closed and the transition graph's edges/nodes
   *     derive from one shared input plan, which concurrent writers must
-  *     never share (the ProfRace3 AQE rule — see
+  *     never share (the ProfRace3 AQE rule,
+  *     SCALING.md ("Round-22 (optimization round 2)") — see
   *     `SearchOps.writePostingsIndex`).
   *   - `broadcastDels`: the resolution join broadcasts the tombstone
   *     set (the event table: tombstones are bounded by erasure-request

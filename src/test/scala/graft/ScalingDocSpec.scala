@@ -15,18 +15,26 @@ import org.scalatest.funsuite.AnyFunSuite
   * fragment>")` — the fragment must appear in some `#`-prefixed heading.
   * A bare `recorded in SCALING.md` with no quoted section also fails:
   * unanchored claims are how the drift crept in.
+  *
+  * The same holds for probe names: a `Prof*` object (or the old streaming
+  * bench main) named in `src/` or `tools/` must still exist as an
+  * `object`, so a deleted probe cannot stay cited as evidence — cite the
+  * SCALING.md heading that records its verdict instead.
   */
 class ScalingDocSpec extends AnyFunSuite {
 
   private val marker = """SCALING\.md \("([^"]+)"\)""".r
   private val bare = """recorded in SCALING\.md(?! \(")""".r
+  private val probe = """\b(Prof[A-Z]\w*|StreamB[e]nch)\b""".r
 
-  private def scalaSources: Seq[Path] =
+  private def sources(exts: String*): Seq[Path] =
     (Files.walk(Paths.get("src")).iterator.asScala
       ++ Files.walk(Paths.get("tools")).iterator.asScala)
-      .filter(p => p.toString.endsWith(".scala"))
+      .filter(p => exts.exists(p.toString.endsWith))
       .filterNot(_.toString.endsWith("ScalingDocSpec.scala")) // the definition site
       .toSeq
+
+  private def scalaSources: Seq[Path] = sources(".scala")
 
   private lazy val headings: Seq[String] =
     Files.readAllLines(Paths.get("SCALING.md")).asScala.toSeq
@@ -54,5 +62,21 @@ class ScalingDocSpec extends AnyFunSuite {
     }
     assert(loose.isEmpty,
       s"""unanchored claims (add ("<heading fragment>")): ${loose.mkString(", ")}""")
+  }
+
+  test("every probe named in src/ or tools/ is an object that still exists") {
+    val texts = sources(".scala", ".py", ".sh")
+      .map(p => p.toString -> new String(Files.readAllBytes(p), "UTF-8"))
+    val named = texts.flatMap { case (f, text) =>
+      probe.findAllMatchIn(text).map(m => (f, m.group(1))).toSeq
+    }
+    val unresolved = named.filterNot { case (_, name) =>
+      texts.exists { case (f, text) =>
+        f.endsWith(".scala") && (raw"\bobject " + name + raw"\b").r.findFirstIn(text).isDefined
+      }
+    }
+    assert(unresolved.isEmpty,
+      "source names probes that no longer exist (cite their SCALING.md heading): " +
+        unresolved.distinct.mkString(", "))
   }
 }

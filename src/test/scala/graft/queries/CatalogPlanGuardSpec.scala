@@ -1,7 +1,9 @@
 package graft.queries
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -37,7 +39,11 @@ import graft.SparkSpec
   *   O(partitions) rows, not data. Those queries are sanctioned BY NAME
   *   in [[scalarFunnelSanctioned]] with the funnel's identity stated —
   *   anything else (e.g. a Window.orderBy with no partitionBy over
-  *   unbounded rows, which plans exactly this exchange) fails the suite.
+  *   unbounded rows, which plans exactly this exchange) fails the suite,
+  *   and the failure prints the first lines of each single-partition
+  *   exchange's CHILD: the relation that would funnel through one task,
+  *   which is what decides whether a new sanction entry is a scalar
+  *   funnel or a data funnel.
   */
 class CatalogPlanGuardSpec extends SparkSpec {
 
@@ -128,9 +134,10 @@ class CatalogPlanGuardSpec extends SparkSpec {
 
   /** Queries whose executed plan contains an `Exchange SinglePartition`
     * that is a sanctioned post-partial-agg scalar funnel (see class
-    * doc). Every entry was audited via ProfFunnels (which prints the
-    * exchange's CHILD): in each, the exchanged relation is a keyless
-    * partial aggregate emitting ≤ 1 row per partition — corpus/count
+    * doc). Every entry was audited from the exchange's CHILD (the guard
+    * prints it for any unsanctioned funnel): in each, the exchanged
+    * relation is a keyless partial aggregate emitting ≤ 1 row per
+    * partition — corpus/count
     * totals, lo/hi quantization stats, or a bounded Misra-Gries sketch
     * buffer — never data rows. The audit that produced this list also
     * caught and FIXED a real offender: e_ppr_seeded's global rank
@@ -164,7 +171,7 @@ class CatalogPlanGuardSpec extends SparkSpec {
     "t_curate_funnel",
     // coverage audit: three partial-summed membership counters over the
     // full-outer id join — the exchanged relation is one 3-sum row per
-    // partition (ProfFunnels-audited this round), never id rows
+    // partition (audited from the exchange's child), never id rows
     "v_cascade_coverage",
     // per-dimension lo/hi stats: 128 partial min/max, one row total
     "v_sq8_stats", "v_sq8_search", "v_sq8_recall",
@@ -186,9 +193,20 @@ class CatalogPlanGuardSpec extends SparkSpec {
     // never data rows
     "v_filtered_pairs")
 
+  /** The first lines of the child of every single-partition exchange in
+    * `p`, through AQE wrappers and subquery expressions.
+    */
+  private def funnelChildren(p: SparkPlan): Seq[String] =
+    p.collectWithSubqueries {
+      case a: AdaptiveSparkPlanExec => funnelChildren(a.executedPlan)
+      case e: ShuffleExchangeExec if e.outputPartitioning.numPartitions == 1 =>
+        Seq(e.child.toString.linesIterator.take(3).map(_.trim).mkString(" / "))
+    }.flatten
+
   /** The guard core — exposed to the negative test: the scale-hostile
     * shapes present in `df`'s executed plan, given the name-keyed
-    * sanction lists.
+    * sanction lists. An unsanctioned single-partition exchange is
+    * reported with its funnelled child.
     */
   private def offenses(name: String, df: DataFrame): Seq[String] = {
     val p = df.queryExecution.executedPlan
@@ -203,7 +221,11 @@ class CatalogPlanGuardSpec extends SparkSpec {
         (plan.contains("Exchange SinglePartition") && !scalarFunnelSanctioned(name)),
       "BroadcastNestedLoopJoin" ->
         (plan.contains("BroadcastNestedLoopJoin") && !bnljSanctioned(name)),
-    ).collect { case (label, true) => label }
+    ).collect {
+      case ("SinglePartition", true) =>
+        s"SinglePartition over [${funnelChildren(p).mkString("] [")}]"
+      case (label, true) => label
+    }
   }
 
   test("no catalog query plans a cartesian, a rogue BNLJ, or an unsanctioned single-partition exchange") {
@@ -225,10 +247,13 @@ class CatalogPlanGuardSpec extends SparkSpec {
     // over the full data stream
     val bad = spark.range(0L, 1000L).toDF("id")
       .withColumn("rn", row_number().over(Window.orderBy($"id")))
-    assert(offenses("synthetic_global_rank", bad).contains("SinglePartition"))
+    val funnel = offenses("synthetic_global_rank", bad)
+    assert(funnel.exists(_.startsWith("SinglePartition")))
+    // the message names the funnelled child: the full range scan
+    assert(funnel.exists(_.contains("Range (0, 1000")), funnel)
     // and a genuine scalar aggregate with no partial-agg bypass is the
     // shape the sanction list exists for — it DOES trip the raw check
     val scalar = spark.range(0L, 1000L).toDF("id").agg(sum($"id").as("s"))
-    assert(offenses("synthetic_scalar_agg", scalar).contains("SinglePartition"))
+    assert(offenses("synthetic_scalar_agg", scalar).exists(_.startsWith("SinglePartition")))
   }
 }
