@@ -15,10 +15,11 @@ import org.apache.spark.sql.types.{ArrayType, BinaryType, DataType, DoubleType, 
   * Why it exists: format v1 persisted the codes as `array<bigint>` —
   * 8 bytes per component, 512 B/vector at dim 64, WIDER than the 256 B
   * float embeddings the compressed tier is supposed to undercut (the
-  * round-17 SCALING.md cost model measured exactly this as why cascade
-  * serving lost to the 2-tier BQ serve). Packed, the stored middle tier
-  * is 64 B/vector — 4x narrower than the floats at any dimension, and
-  * the scan cost finally matches the design intent.
+  * round-17 cost model measured exactly this as why cascade serving
+  * lost to the 2-tier BQ serve,
+  * SCALING.md ("Round-17: ANN serving probes 11/12/13")). Packed, the
+  * stored middle tier is 64 B/vector — 4x narrower than the floats at
+  * any dimension, and the scan cost finally matches the design intent.
   *
   * Faithful by construction: values are masked to the low byte
   * (`(byte)(c & 0xFF)`), exact for the quantizer's [0, 255] range —

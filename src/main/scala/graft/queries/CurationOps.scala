@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.sources.Tables
+import graft.sources.{StoredIndex, Tables}
 
 /** Dataset-curation operators — the assignment half of a training-data
   * pipeline, downstream of cleaning/dedup (`TextOps`): deterministic
@@ -1489,12 +1489,12 @@ object CurationOps {
         .select("reason").first().getString(0)
       val reasonPinned = reason()
       val removedPinned = IndexManifest.vacuum(dir, IndexManifest.Bq)
-      val pinnedRows = VectorOps.storedBqWords(s, dir, asOf = Some(1L)).count()
+      val pinnedRows = StoredIndex.Bq.resolved(s, dir, asOf = Some(1L)).count()
       IndexManifest.releasePin(dir, "audit-run")
       val reasonReleased = reason()
       val removedReleased = IndexManifest.vacuum(dir, IndexManifest.Bq)
       val asOfReleased =
-        try VectorOps.storedBqWords(s, dir, asOf = Some(1L)).count()
+        try StoredIndex.Bq.resolved(s, dir, asOf = Some(1L)).count()
         catch { case _: IllegalArgumentException => -1L }
       Seq(
         ("pinned", reasonPinned, removedPinned, pinnedRows),

@@ -297,14 +297,14 @@ object Erasure {
     val idsDf = ids.select(col("doc_id").cast("long").as("doc_id"))
       .distinct().localCheckpoint(true)
     def refCounts(tag: String, path: String): Option[DataFrame] = (tag match {
-      case "postings" => Some(SearchOps.storedPostings(s, path)
+      case "postings" => Some(StoredIndex.Postings.resolved(s, path)
         .drop("epoch").select(col("doc_id")))
-      case "lsh"      => Some(TextOps.storedLshBands(s, path).select(col("doc_id")))
+      case "lsh"      => Some(StoredIndex.Lsh.resolved(s, path).select(col("doc_id")))
       case "ivfpq"    => Some(StoredIndex.IvfPq.resolved(s, path)
         .select(col("vec_id").as("doc_id")))
-      case "bq"       => Some(VectorOps.storedBqWords(s, path)
+      case "bq"       => Some(StoredIndex.Bq.resolved(s, path)
         .select(col("vec_id").as("doc_id")))
-      case "sq8"      => Some(VectorOps.storedSq8Codes(s, path)
+      case "sq8"      => Some(StoredIndex.Sq8.resolved(s, path)
         .select(col("vec_id").as("doc_id")))
       case _          => None // shingle: count-aggregated; scd2: see scaladoc
     }).map { rows =>
@@ -332,7 +332,7 @@ object Erasure {
     * through exactly the resolved views readers serve from:
     *
     *   - cooccur — the stored `ui` rows ARE the user's data
-    *     (tombstone-resolved, [[GraphOps.resolvedUi]]);
+    *     (tombstone-resolved, `StoredIndex.Cooccur.resolved`);
     *   - table — the zone-mapped event table's resolved rows
     *     ([[LayoutOps.readEventTable]]): the source log must certify 0
     *     too, or the fleet certificate is theater.
@@ -348,7 +348,7 @@ object Erasure {
     val idsDf = ids.select(col("user_id").cast("long").as("user_id"))
       .distinct().localCheckpoint(true)
     def refCounts(tag: String, path: String): Option[DataFrame] = (tag match {
-      case "cooccur" => Some(GraphOps.resolvedUi(s, path).select(col("user_id")))
+      case "cooccur" => Some(StoredIndex.Cooccur.resolved(s, path).select(col("user_id")))
       case "table"   => Some(LayoutOps.readEventTable(s, path).select(col("user_id")))
       case _         => None // transition: count-aggregated; see scaladoc
     }).map { rows =>

@@ -327,18 +327,15 @@ object GraphOps {
     * the graph).
     */
   def writeTransitionGraph(evs: DataFrame, path: String): Unit = {
-    import graft.sources.IndexManifest
+    val T = StoredIndex.Transition
     val s = evs.sparkSession
     import s.implicits._
     // edges and nodes both derive from `evs`: the declaration runs the
     // transition graph's writes in order, never concurrently
-    StoredIndex.Transition.build(s, path)(
-      "edges" -> (() =>
-        transitionEdges(evs)
-          .write.mode("overwrite").parquet(IndexManifest.epochDir(path, "edges", 0L))),
+    T.build(s, path)(
+      "edges" -> (() => T.write(transitionEdges(evs), path, "edges", 0L)),
       "nodes" -> (() =>
-        evs.filter($"item".isNotNull).select($"item").distinct()
-          .write.mode("overwrite").parquet(IndexManifest.epochDir(path, "nodes", 0L))))
+        T.write(evs.filter($"item".isNotNull).select($"item").distinct(), path, "nodes", 0L)))
   }
 
   /** Fold a NEW slice of the event log into the stored transition graph
@@ -372,19 +369,16 @@ object GraphOps {
     */
   private[graft] def stageTransitionAppend(
       deltaWithCarry: DataFrame, path: String, e: Long): Unit = {
-    import graft.sources.IndexManifest
+    val T = StoredIndex.Transition
     val s = deltaWithCarry.sparkSession
     import s.implicits._
-    IndexManifest.readRewrite(s, path, "edges", IndexManifest.Transition)
-      .join(transitionEdges(deltaWithCarry).withColumnRenamed("w", "w_add"),
-        Seq("src", "dst"), "full_outer")
-      .select($"src", $"dst",
-        (coalesce($"w", lit(0L)) + coalesce($"w_add", lit(0L))).as("w"))
-      .write.mode("overwrite").parquet(IndexManifest.epochDir(path, "edges", e))
-    IndexManifest.readRewrite(s, path, "nodes", IndexManifest.Transition)
-      .unionByName(deltaWithCarry.filter($"item".isNotNull).select($"item"))
-      .distinct()
-      .write.mode("overwrite").parquet(IndexManifest.epochDir(path, "nodes", e))
+    T.run(
+      "edges" -> (() =>
+        T.write(T.add(s, path, "edges", transitionEdges(deltaWithCarry)), path, "edges", e)),
+      "nodes" -> (() =>
+        T.write(T.read(s, path, "nodes")
+          .unionByName(deltaWithCarry.filter($"item".isNotNull).select($"item"))
+          .distinct(), path, "nodes", e)))
   }
 
   /** Stage (but do NOT commit) a transition-graph forget epoch — for
@@ -392,23 +386,18 @@ object GraphOps {
     */
   private[graft] def stageTransitionForget(
       userEvs: DataFrame, path: String, e: Long): Unit = {
-    import graft.sources.IndexManifest
+    val T = StoredIndex.Transition
     val s = userEvs.sparkSession
-    import s.implicits._
     // a user's edge contribution is exactly transitionEdges(their
     // events): the per-user window makes the edge build additive across
-    // users, so subtracting it reproduces a rebuild without them
-    val sub = transitionEdges(userEvs).withColumnRenamed("w", "w_sub")
-    IndexManifest.readRewrite(s, path, "edges", IndexManifest.Transition)
-      .join(sub, Seq("src", "dst"), "left")
-      .select($"src", $"dst",
-        ($"w" - coalesce($"w_sub", lit(0L))).as("w"))
-      .filter($"w" > 0L) // an edge only they walked disappears
-      .write.mode("overwrite").parquet(IndexManifest.epochDir(path, "edges", e))
-    // nodes are the ITEM CATALOG, not user data — copied forward
-    // unchanged (see forgetTransitionUsers for the contract)
-    IndexManifest.readRewrite(s, path, "nodes", IndexManifest.Transition)
-      .write.mode("overwrite").parquet(IndexManifest.epochDir(path, "nodes", e))
+    // users, so subtracting it reproduces a rebuild without them; an
+    // edge only they walked disappears
+    T.run(
+      "edges" -> (() =>
+        T.write(T.giveBack(s, path, "edges", transitionEdges(userEvs)), path, "edges", e)),
+      // nodes are the ITEM CATALOG, not user data — copied forward
+      // unchanged (see forgetTransitionUsers for the contract)
+      "nodes" -> (() => T.write(T.read(s, path, "nodes"), path, "nodes", e)))
   }
 
   /** Forget USERS from the stored transition graph — the journey half
@@ -442,13 +431,9 @@ object GraphOps {
     * the inline `e_pagerank` (the parity spec pins it); touches only
     * the persisted graph-sized tables at their committed epoch.
     */
-  def pageRankFromGraph(s: SparkSession, path: String): DataFrame = {
-    import graft.sources.IndexManifest
-    pageRankOn(
-      IndexManifest.readRewrite(s, path, "nodes", IndexManifest.Transition),
-      IndexManifest.readRewrite(s, path, "edges", IndexManifest.Transition),
-      prIters)
-  }
+  def pageRankFromGraph(s: SparkSession, path: String): DataFrame =
+    pageRankOn(StoredIndex.Transition.read(s, path, "nodes"),
+      StoredIndex.Transition.read(s, path, "edges"), prIters)
 
   /** (src, dst, w) transition edges from the event log: one per-user
     * ordered pass (a single shuffle on user_id), self-loops dropped.
@@ -732,7 +717,7 @@ object GraphOps {
   /** Build + persist the co-occurrence index from an event frame. */
   def writeCooccurIndex(evs: DataFrame, path: String,
       cap: Long = maxUserDegree): Unit = {
-    import graft.sources.IndexManifest
+    val C = StoredIndex.Cooccur
     val s = evs.sparkSession
     import s.implicits._
     val ui = evs.filter($"item".isNotNull)
@@ -743,41 +728,24 @@ object GraphOps {
     // the declaration adds the empty user-tombstone epoch (format v3
     // added `dels/` — the per-family version gate keeps v2 indexes from
     // being mis-read as forgettable)
-    StoredIndex.Cooccur.build(s, path)(
-      "ui" -> (() =>
-        ui.write.mode("overwrite").parquet(IndexManifest.epochDir(path, "ui", 0L))),
-      "degrees" -> { () =>
-        ui.groupBy($"user_id").agg(count(lit(1)).as("deg"))
-          .write.mode("overwrite").parquet(IndexManifest.epochDir(path, "degrees", 0L))
-      },
-      "pairs" -> { () =>
-        pairSupport(cappedUi(ui, cap))
-          .write.mode("overwrite").parquet(IndexManifest.epochDir(path, "pairs", 0L))
-      })
+    C.build(s, path)(
+      "ui" -> (() => C.write(ui, path, "ui", 0L)),
+      "degrees" -> (() =>
+        C.write(ui.groupBy($"user_id").agg(count(lit(1)).as("deg")), path, "degrees", 0L)),
+      "pairs" -> (() => C.write(pairSupport(cappedUi(ui, cap)), path, "pairs", 0L)))
   }
-
-  /** The RESOLVED (user_id, item) rows of the stored index: the
-    * committed ui window minus tombstoned users under epoch precedence
-    * — a forget at epoch d hides only ui rows appended at epochs ≤ d,
-    * so forget-then-re-append resurrects the user with their new rows
-    * (the same sequence-number rule as the doc-grain forget paths).
-    * Every index reader (fold, communities, recommendations) goes
-    * through this view; the raw component is never consumed directly.
-    */
-  private[graft] def resolvedUi(s: SparkSession, path: String): DataFrame =
-    StoredIndex.Cooccur.resolved(s, path)
 
   /** Stage (but do NOT commit) epoch `e` of a co-occurrence fold —
     * exposed for the atomicity drill.
     */
   private[graft] def stageCooccurAppend(deltaEvs: DataFrame, path: String, e: Long,
       cap: Long = maxUserDegree): Unit = {
-    import graft.sources.IndexManifest
+    val C = StoredIndex.Cooccur
     val s = deltaEvs.sparkSession
     import s.implicits._
     val newRows = deltaEvs.filter($"item".isNotNull)
       .select($"user_id", $"item").distinct()
-    val oldUi = resolvedUi(s, path)
+    val oldUi = C.resolved(s, path)
     // strictly-new (user, item) rows; users they belong to are the ONLY
     // users whose contribution can change. Resolved view, not the raw
     // component: a forgotten user's re-appearing rows must NOT be
@@ -793,17 +761,14 @@ object GraphOps {
     val fullItems = oldItems.unionByName(delta).localCheckpoint(true)
     // ui, degrees and the pair fold read the materialized delta/item
     // blocks — independent stage writes under one flip (§2.6)
-    graft.sources.Overlap.run(
-      "ui" -> (() =>
-        delta.write.mode("overwrite").parquet(IndexManifest.epochDir(path, "ui", e))),
+    C.run(
+      "ui" -> (() => C.write(delta, path, "ui", e)),
       "degrees" -> { () =>
         val degNew = fullItems.groupBy($"user_id").agg(count(lit(1)).as("deg"))
         // degrees table: merge the affected users' new degrees over the old
-        IndexManifest.readRewrite(s, path, "degrees", IndexManifest.Cooccur)
+        C.write(C.read(s, path, "degrees")
           .join(degNew.withColumnRenamed("deg", "deg_new"), Seq("user_id"), "full_outer")
-          .select($"user_id", coalesce($"deg_new", $"deg").as("deg"))
-          .write.mode("overwrite")
-          .parquet(IndexManifest.epochDir(path, "degrees", e))
+          .select($"user_id", coalesce($"deg_new", $"deg").as("deg")), path, "degrees", e)
       },
       "pairs" -> { () =>
         // per-user contribution = capped pairs(after) − capped pairs(before)
@@ -813,14 +778,11 @@ object GraphOps {
           .withColumnRenamed("n_users", "n_sub")
         val contrib = addPairs.join(subPairs, Seq("i1", "i2"), "full_outer")
           .select($"i1", $"i2",
-            (coalesce($"n_add", lit(0L)) - coalesce($"n_sub", lit(0L))).as("n_delta"))
-          .filter($"n_delta" =!= 0L)
-        IndexManifest.readRewrite(s, path, "pairs", IndexManifest.Cooccur)
-          .join(contrib, Seq("i1", "i2"), "full_outer")
-          .select($"i1", $"i2",
-            (coalesce($"n_users", lit(0L)) + coalesce($"n_delta", lit(0L))).as("n_users"))
-          .filter($"n_users" > 0L) // a fully-retracted pair leaves the table
-          .write.mode("overwrite").parquet(IndexManifest.epochDir(path, "pairs", e))
+            (coalesce($"n_add", lit(0L)) - coalesce($"n_sub", lit(0L))).as("n_users"))
+          .filter($"n_users" =!= 0L)
+        C.write(C.add(s, path, "pairs", contrib)
+          .filter($"n_users" > 0L), // a fully-retracted pair leaves the table
+          path, "pairs", e)
       })
   }
 
@@ -843,7 +805,7 @@ object GraphOps {
     */
   private[graft] def stageCooccurForget(users: DataFrame, path: String, e: Long,
       cap: Long = maxUserDegree): Unit = {
-    import graft.sources.IndexManifest
+    val C = StoredIndex.Cooccur
     val s = users.sparkSession
     val del = users.select(col("user_id").cast("long")).distinct()
       .localCheckpoint(true) // feeds the tombstone write AND both give-backs
@@ -852,31 +814,21 @@ object GraphOps {
     // (never-paired) user contributes zero subtraction, eligible users
     // subtract exactly the pairs they supported: the fold's uniform
     // contribution formula, run in reverse
-    val items = resolvedUi(s, path).join(del, Seq("user_id"), "left_semi")
+    val items = C.resolved(s, path).join(del, Seq("user_id"), "left_semi")
       .localCheckpoint(true)
-    val sub = pairSupport(cappedUi(items, cap))
-      .withColumnRenamed("n_users", "n_sub")
     // tombstone write and both give-backs read the materialized del/item
     // blocks — independent stage writes under one flip (§2.6)
-    graft.sources.Overlap.run(
-      "dels" -> (() =>
-        del.write.mode("overwrite").parquet(IndexManifest.epochDir(path, "dels", e))),
+    C.run(
+      StoredIndex.Dels -> (() => C.write(del, path, StoredIndex.Dels, e)),
       // support give-back in the SAME epoch — a pair supported only by
       // forgotten users leaves the table, exactly as a rebuild without them
-      "pairs" -> { () =>
-        IndexManifest.readRewrite(s, path, "pairs", IndexManifest.Cooccur)
-          .join(sub, Seq("i1", "i2"), "left")
-          .select(col("i1"), col("i2"),
-            (col("n_users") - coalesce(col("n_sub"), lit(0L))).as("n_users"))
-          .filter(col("n_users") > 0L)
-          .write.mode("overwrite").parquet(IndexManifest.epochDir(path, "pairs", e))
-      },
+      "pairs" -> (() =>
+        C.write(C.giveBack(s, path, "pairs", pairSupport(cappedUi(items, cap))),
+          path, "pairs", e)),
       // the forgotten users leave the degree table (erasure, not zeroing)
-      "degrees" -> { () =>
-        IndexManifest.readRewrite(s, path, "degrees", IndexManifest.Cooccur)
-          .join(del, Seq("user_id"), "left_anti")
-          .write.mode("overwrite").parquet(IndexManifest.epochDir(path, "degrees", e))
-      })
+      "degrees" -> (() =>
+        C.write(C.read(s, path, "degrees").join(del, Seq("user_id"), "left_anti"),
+          path, "degrees", e)))
   }
 
   /** Forget USERS from the stored co-occurrence index — the behavioral
@@ -912,9 +864,8 @@ object GraphOps {
     * equality); reads the catalog²-bounded artifact only.
     */
   def cooccurTopKFromIndex(s: SparkSession, path: String, k: Int): DataFrame = {
-    import graft.sources.IndexManifest
     import s.implicits._
-    IndexManifest.readRewrite(s, path, "pairs", IndexManifest.Cooccur)
+    StoredIndex.Cooccur.read(s, path, "pairs")
       .orderBy($"n_users".desc, $"i1", $"i2")
       .limit(k)
   }
@@ -927,14 +878,13 @@ object GraphOps {
     */
   def communitiesFromIndex(
       s: SparkSession, path: String, minSupport: Long = commMinSupport): DataFrame = {
-    import graft.sources.IndexManifest
     import s.implicits._
-    val edges = IndexManifest.readRewrite(s, path, "pairs", IndexManifest.Cooccur)
+    val edges = StoredIndex.Cooccur.read(s, path, "pairs")
       .filter($"n_users" >= minSupport)
       .select($"i1".as("doc_a"), $"i2".as("doc_b"))
     val labels = TextOps.connectedComponents(edges)
       .select($"v".as("item"), $"rep", $"converged")
-    val lbl = resolvedUi(s, path)
+    val lbl = StoredIndex.Cooccur.resolved(s, path)
       .select($"item").distinct()
       .join(labels, Seq("item"), "left")
       .select($"item",
@@ -953,10 +903,9 @@ object GraphOps {
     */
   def recommendationsFromIndex(
       s: SparkSession, path: String, k: Int = recK): DataFrame = {
-    import graft.sources.IndexManifest
     import s.implicits._
-    val ui = resolvedUi(s, path)
-    val pairs = IndexManifest.readRewrite(s, path, "pairs", IndexManifest.Cooccur)
+    val ui = StoredIndex.Cooccur.resolved(s, path)
+    val pairs = StoredIndex.Cooccur.read(s, path, "pairs")
       .withColumnRenamed("n_users", "n")
     val sym = pairs.select($"i1".as("item"), $"i2".as("rec"), $"n")
       .unionByName(pairs.select($"i2".as("item"), $"i1".as("rec"), $"n"))

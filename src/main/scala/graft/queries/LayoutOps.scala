@@ -341,21 +341,18 @@ object LayoutOps {
     import graft.sources.IndexManifest
     val s = evs.sparkSession
     import s.implicits._
-    val dataDir = IndexManifest.epochDir(path, "data", e)
-    evs
+    val L = StoredIndex.Layout
+    L.write(evs
       .withColumn("day", expr("ts_sec div 86400"))
       .withColumn("z", morton2Checked($"user_id", $"day"))
       .repartitionByRange(nFiles, $"z")
-      .sortWithinPartitions($"z")
-      .write.mode("overwrite").parquet(dataDir)
-    s.read.parquet(dataDir)
+      .sortWithinPartitions($"z"), path, "data", e)
+    L.write(s.read.parquet(IndexManifest.epochDir(path, "data", e))
       .groupBy(input_file_name().as("file"))
       .agg(min($"user_id").as("u_lo"), max($"user_id").as("u_hi"),
         min($"day").as("d_lo"), max($"day").as("d_hi"),
         count(lit(1)).as("n_rows"))
-      .coalesce(1)
-      .write.mode("overwrite")
-      .parquet(IndexManifest.epochDir(path, "zonemap", e))
+      .coalesce(1), path, "zonemap", e)
   }
 
   /** Create the table: epoch 0 of data + zone map + empty user
@@ -419,10 +416,8 @@ object LayoutOps {
   def eventTableBoxScan(s: SparkSession, path: String,
       uLo: Long, uHi: Long, dLo: Long, dHi: Long,
       asOf: Option[Long] = None): DataFrame = {
-    import graft.sources.IndexManifest
     import s.implicits._
-    val files = IndexManifest
-      .readAppendOnly(s, path, "zonemap", IndexManifest.Layout, asOf)
+    val files = StoredIndex.Layout.readWindow(s, path, "zonemap", asOf)
       .filter(!($"u_hi" < uLo || $"u_lo" > uHi || $"d_hi" < dLo || $"d_lo" > dHi))
       .select($"file").collect().map(_.getString(0))
     if (files.isEmpty)
@@ -654,10 +649,8 @@ object LayoutOps {
   private[queries] def eventTableBoxCountDetail(s: SparkSession, path: String,
       uLo: Long, uHi: Long, dLo: Long, dHi: Long,
       asOf: Option[Long] = None, delsCap: Long = delsProbeCap): (Long, Long, Long) = {
-    import graft.sources.IndexManifest
     import s.implicits._
-    val delsDf = IndexManifest
-      .readAppendOnly(s, path, "dels", IndexManifest.Layout, asOf)
+    val delsDf = StoredIndex.Layout.readWindow(s, path, StoredIndex.Dels, asOf)
       .select($"user_id").distinct()
     // count BEFORE collecting: past the cap, the driver-side probe set
     // would be unbounded, so demote EVERY overlapping file to the
@@ -671,8 +664,7 @@ object LayoutOps {
       val idx = if (i >= 0) i else -i - 1
       idx < delUsers.length && delUsers(idx) <= uH
     }
-    val zm = IndexManifest
-      .readAppendOnly(s, path, "zonemap", IndexManifest.Layout, asOf)
+    val zm = StoredIndex.Layout.readWindow(s, path, "zonemap", asOf)
       .filter(!($"u_hi" < uLo || $"u_lo" > uHi || $"d_hi" < dLo || $"d_lo" > dHi))
       .select($"file", $"u_lo", $"u_hi", $"d_lo", $"d_hi", $"n_rows")
       .collect()

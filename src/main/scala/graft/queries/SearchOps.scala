@@ -488,15 +488,6 @@ object SearchOps {
     },
   )
 
-  /** The resolved stored postings (tombstoned documents removed under
-    * epoch precedence, [[deleteFromPostingsIndex]]). Bucket filters
-    * applied by callers still push below the tombstone join to the
-    * parquet scan (partition pruning intact).
-    */
-  private[graft] def storedPostings(s: SparkSession, path: String,
-      asOf: Option[Long] = None): DataFrame =
-    StoredIndex.Postings.resolved(s, path, asOf)
-
   /** Proximity top-k against the STORED index — the second query class
     * the positional postings pay for: two bucket-pruned position lists
     * joined on doc_id, same near_tf aggregate as [[proximitySearch]]
@@ -506,10 +497,9 @@ object SearchOps {
   def proximitySearchFromIndex(
       s: SparkSession, path: String, t1: String, t2: String, k: Int,
       slop: Int = proxSlop): DataFrame = {
-    import graft.sources.IndexManifest
     import s.implicits._
     val buckets = Seq(t1, t2).map(t => jvmH60(t) % indexBuckets).distinct
-    val posts = storedPostings(s, path)
+    val posts = StoredIndex.Postings.resolved(s, path)
       .filter($"bucket".isin(buckets: _*))
       .filter($"t".isin(Seq(t1, t2).distinct: _*))
       .select($"doc_id", $"t", $"positions")
@@ -707,7 +697,6 @@ object SearchOps {
     * ([[bm25SearchFromIndex]]) while tf-idf just ignores the column.
     */
   def writePostingsIndex(docsDf: DataFrame, path: String): Unit = {
-    import graft.sources.IndexManifest
     val s = docsDf.sparkSession
     import s.implicits._
     // the four epoch-0 components are independent writes under one
@@ -723,22 +712,18 @@ object SearchOps {
     // eager-checkpointed ExistingRDD frames are exempt, having no
     // exchange to share; SCALING.md ("Round-22 (optimization round 2)")).
     // The empty tombstone epoch joins them from the declaration.
-    StoredIndex.Postings.build(s, path)(
-      "postings" -> (() =>
-        StoredIndex.Postings.writeMain(positionalPostings(docsDf), path, 0L)),
-      "terms" -> { () =>
-        positionalPostings(docsDf)
+    val P = StoredIndex.Postings
+    P.build(s, path)(
+      "postings" -> (() => P.writeMain(positionalPostings(docsDf), path, 0L)),
+      "terms" -> (() =>
+        P.write(positionalPostings(docsDf)
           .groupBy($"t").agg(count(lit(1)).as("df"))
-          .coalesce(1)
-          .write.mode("overwrite").parquet(IndexManifest.epochDir(path, "terms", 0L))
-      },
-      "corpus" -> { () =>
-        docsDf
+          .coalesce(1), path, "terms", 0L)),
+      "corpus" -> (() =>
+        P.write(docsDf
           .agg(count(lit(1)).as("n_docs"),
             coalesce(sum(size(TextOps.toks).cast("long")), lit(0L)).as("total_tokens"))
-          .coalesce(1)
-          .write.mode("overwrite").parquet(IndexManifest.epochDir(path, "corpus", 0L))
-      })
+          .coalesce(1), path, "corpus", 0L)))
   }
 
   /** Stage (but do NOT commit) epoch `e` of a postings append — the
@@ -750,7 +735,7 @@ object SearchOps {
     * Exposed for the atomicity spec, which kills the append here.
     */
   private[graft] def stagePostingsAppend(newDocs: DataFrame, path: String, e: Long): Unit = {
-    import graft.sources.IndexManifest
+    val P = StoredIndex.Postings
     val s = newDocs.sparkSession
     import s.implicits._
     val postings = positionalPostings(newDocs)
@@ -758,30 +743,24 @@ object SearchOps {
     // the three stage writes read the materialized postings blocks (or
     // committed epoch e-1 components) — independent under one flip,
     // overlapped (guide §2.6)
-    graft.sources.Overlap.run(
-      "postings" -> (() => StoredIndex.Postings.writeMain(postings, path, e)),
-      "terms" -> { () =>
-        IndexManifest.readRewrite(s, path, "terms", IndexManifest.Postings)
-          .join(postings.groupBy($"t").agg(count(lit(1)).as("df_add")), Seq("t"), "full_outer")
-          .select($"t",
-            (coalesce($"df", lit(0L)) + coalesce($"df_add", lit(0L))).as("df"))
-          .coalesce(1)
-          .write.mode("overwrite").parquet(IndexManifest.epochDir(path, "terms", e))
-      },
+    P.run(
+      "postings" -> (() => P.writeMain(postings, path, e)),
+      "terms" -> (() =>
+        P.write(P.add(s, path, "terms", postings.groupBy($"t").agg(count(lit(1)).as("df")))
+          .coalesce(1), path, "terms", e)),
       // Σ tf over the new postings == the arrivals' token count — the
       // corpus-total advance reuses the checkpointed pass, no re-tokenize
       "corpus" -> { () =>
-        val old = IndexManifest.readRewrite(s, path, "corpus", IndexManifest.Postings).first()
+        val old = P.read(s, path, "corpus").first()
         val add = postings
           .agg(countDistinct($"doc_id"), coalesce(sum($"tf"), lit(0L))).first()
         // doc-count advance counts ALL arrivals (a < 1-token doc posts
         // nothing but is still a corpus member)
         val nNew = newDocs.agg(count(lit(1))).first().getLong(0)
         assert(add.getLong(0) <= nNew)
-        Seq((old.getLong(0) + nNew, old.getLong(1) + add.getLong(1)))
+        P.write(Seq((old.getLong(0) + nNew, old.getLong(1) + add.getLong(1)))
           .toDF("n_docs", "total_tokens")
-          .coalesce(1)
-          .write.mode("overwrite").parquet(IndexManifest.epochDir(path, "corpus", e))
+          .coalesce(1), path, "corpus", e)
       })
   }
 
@@ -816,37 +795,29 @@ object SearchOps {
 
   /** Stage (but do NOT commit) a de-index epoch — for the kill drill. */
   private[queries] def stagePostingsDelete(ids: DataFrame, path: String, e: Long): Unit = {
-    import graft.sources.IndexManifest
+    val P = StoredIndex.Postings
     val s = ids.sparkSession
     import s.implicits._
     val del = ids.select($"doc_id".cast("long")).distinct()
       .localCheckpoint(true) // feeds the tombstone write AND both stat fixes
     // the deleted docs' CURRENT postings (resolved view, before this
     // epoch) carry exactly the df/token mass the stats must give back
-    val gone = storedPostings(s, path).join(del, "doc_id")
+    val gone = P.resolved(s, path).join(del, "doc_id")
       .localCheckpoint(true)
     // tombstone write and both stat give-backs read the materialized
     // del/gone blocks — independent under one flip, overlapped (§2.6)
-    graft.sources.Overlap.run(
-      "dels" -> (() =>
-        del.write.mode("overwrite")
-          .parquet(IndexManifest.epochDir(path, "dels", e))),
-      "terms" -> { () =>
-        IndexManifest.readRewrite(s, path, "terms", IndexManifest.Postings)
-          .join(gone.groupBy($"t").agg(count(lit(1)).as("df_sub")), Seq("t"), "left")
-          .select($"t", ($"df" - coalesce($"df_sub", lit(0L))).as("df"))
-          .filter($"df" > 0L) // a rebuild has no zero-df rows
-          .coalesce(1)
-          .write.mode("overwrite").parquet(IndexManifest.epochDir(path, "terms", e))
-      },
+    P.run(
+      "dels" -> (() => P.write(del, path, StoredIndex.Dels, e)),
+      "terms" -> (() =>
+        P.write(P.giveBack(s, path, "terms", gone.groupBy($"t").agg(count(lit(1)).as("df")))
+          .coalesce(1), path, "terms", e)),
       "corpus" -> { () =>
-        val old = IndexManifest.readRewrite(s, path, "corpus", IndexManifest.Postings).first()
+        val old = P.read(s, path, "corpus").first()
         val sub = gone.agg(coalesce(sum($"tf"), lit(0L))).first().getLong(0)
         val nDel = del.count()
-        Seq((old.getLong(0) - nDel, old.getLong(1) - sub))
+        P.write(Seq((old.getLong(0) - nDel, old.getLong(1) - sub))
           .toDF("n_docs", "total_tokens")
-          .coalesce(1)
-          .write.mode("overwrite").parquet(IndexManifest.epochDir(path, "corpus", e))
+          .coalesce(1), path, "corpus", e)
       })
   }
 
@@ -878,14 +849,13 @@ object SearchOps {
     */
   def tfidfSearchFromIndex(
       s: SparkSession, path: String, terms: Seq[String], k: Int): DataFrame = {
-    import graft.sources.IndexManifest
     import s.implicits._
     val buckets = terms.map(t => jvmH60(t) % indexBuckets).distinct
-    val postings = storedPostings(s, path)
+    val postings = StoredIndex.Postings.resolved(s, path)
       .filter($"bucket".isin(buckets: _*)) // parquet partition pruning
       .filter($"t".isin(terms: _*))
-    val n = IndexManifest.readRewrite(s, path, "corpus", IndexManifest.Postings).first().getLong(0)
-    val df = IndexManifest.readRewrite(s, path, "terms", IndexManifest.Postings)
+    val n = StoredIndex.Postings.read(s, path, "corpus").first().getLong(0)
+    val df = StoredIndex.Postings.read(s, path, "terms")
       .filter($"t".isin(terms: _*))
       .withColumn("idf_ppm", expr(s"(${n}L * 1000000L) div df"))
     postings
@@ -923,10 +893,9 @@ object SearchOps {
       s: SparkSession, path: String, terms: Seq[String],
       asOf: Option[Long] = None,
       keepIds: Option[DataFrame] = None): DataFrame = {
-    import graft.sources.IndexManifest
     import s.implicits._
     val buckets = terms.map(t => jvmH60(t) % indexBuckets).distinct
-    val postings0 = storedPostings(s, path, asOf)
+    val postings0 = StoredIndex.Postings.resolved(s, path, asOf)
       .filter($"bucket".isin(buckets: _*)) // parquet partition pruning
       .filter($"t".isin(terms: _*))
     // eligibility pre-filter (the searchBqIndexWhere strategy, sparse
@@ -939,10 +908,9 @@ object SearchOps {
       postings0.join(keep.select($"doc_id"), Seq("doc_id"), "left_semi"))
     // asOf pins stats AND postings to the same epoch — a consistent
     // snapshot (idf and postings can never mix generations)
-    val stats = IndexManifest.readRewrite(
-      s, path, "corpus", IndexManifest.Postings, asOf).first()
+    val stats = StoredIndex.Postings.read(s, path, "corpus", asOf).first()
     val (n, tl) = (stats.getAs[Long]("n_docs"), stats.getAs[Long]("total_tokens"))
-    val df = IndexManifest.readRewrite(s, path, "terms", IndexManifest.Postings, asOf)
+    val df = StoredIndex.Postings.read(s, path, "terms", asOf)
       .filter($"t".isin(terms: _*))
       .withColumn("idf_ppm", expr(s"(${n}L * 1000000L) div df"))
     postings
@@ -968,11 +936,10 @@ object SearchOps {
     */
   def phraseSearchFromIndex(
       s: SparkSession, path: String, phrase: Seq[String], k: Int): DataFrame = {
-    import graft.sources.IndexManifest
     import s.implicits._
     require(phrase.nonEmpty, "empty phrase")
     val buckets = phrase.map(t => jvmH60(t) % indexBuckets).distinct
-    val posts = storedPostings(s, path)
+    val posts = StoredIndex.Postings.resolved(s, path)
       .filter($"bucket".isin(buckets: _*)) // parquet partition pruning
       .filter($"t".isin(phrase.distinct: _*))
       .select($"doc_id", $"t", $"positions")

@@ -120,7 +120,8 @@ object TextOps {
     * ALL of it inside the one-task scan stage (the signature aggregation
     * is partial-agg'd in the same stage as the scan). This is the one
     * place where the fan-out exchange measured faster — a blanket
-    * scan-side fan-out made every other query slower (SCALING.md round 3);
+    * scan-side fan-out made every other query slower,
+    * SCALING.md ("Round-3 findings: three measured optimizations");
     * on a multi-row-group table the repartition is skipped entirely.
     */
   private[queries] def docShingles(s: SparkSession, d: String): DataFrame =
@@ -1286,8 +1287,9 @@ object TextOps {
     * while it measures small and falls back to a shuffle join beyond.
     * Shared by the raw query and the dedup-first composition — on a corpus
     * with exact duplicates the shared-shingle join multiplies per replica
-    * pair (30 s vs 1 s on the 5× corpus, SCALING.md), so compose with
-    * exact dedup first.
+    * pair (30 s vs 1 s on the 5× corpus,
+    * SCALING.md ("Round-3 full-catalog sweep at 5× sf0.1")), so compose
+    * with exact dedup first.
     */
   private def jaccardPairs(sh: DataFrame): DataFrame = {
     val sizes = sh.groupBy(col("doc_id")).agg(count(lit(1)).as("n_sh"))
@@ -1516,9 +1518,10 @@ object TextOps {
   // ---------------------------------------------------------------------
   // Composed dedup pipeline: exact dedup FIRST (collapse identical
   // payloads on the md5 hash — cheap, one shuffle), near-dup candidates
-  // on the survivors only. This is the composition SCALING.md prescribes
-  // for duplicate-heavy corpora: the quadratic within-bucket term of the
-  // LSH stage only ever sees unique texts.
+  // on the survivors only. This is the composition
+  // SCALING.md ("Round-3 full-catalog sweep at 5× sf0.1") prescribes for
+  // duplicate-heavy corpora: the quadratic within-bucket term of the LSH
+  // stage only ever sees unique texts.
   // ---------------------------------------------------------------------
 
   val neardupPostDedup = Q(
@@ -2313,22 +2316,17 @@ object TextOps {
 
   /** Initialize the stored SCD2 table from the first snapshot day. */
   def writeScd2(snap: DataFrame, day: Long, path: String): Unit = {
-    import graft.sources.IndexManifest
+    val S = StoredIndex.Scd2
     val s = snap.sparkSession
     import s.implicits._
     val v = scd2Versions(snap, day)
     // latest and closed share `v`'s plan: the declaration runs Scd2's
     // writes in order, never concurrently (then the empty tombstones)
-    StoredIndex.Scd2.build(s, path)(
-      "latest" -> (() =>
-        v.write.mode("overwrite").parquet(IndexManifest.epochDir(path, "latest", 0L))),
-      "closed" -> (() =>
-        v.filter(lit(false)) // closed starts empty, schema-carrying
-          .write.mode("overwrite").parquet(IndexManifest.epochDir(path, "closed", 0L))),
-      "meta" -> (() =>
-        Seq(day).toDF("last_day")
-          .coalesce(1)
-          .write.mode("overwrite").parquet(IndexManifest.epochDir(path, "meta", 0L))))
+    S.build(s, path)(
+      "latest" -> (() => S.write(v, path, "latest", 0L)),
+      // closed starts empty, schema-carrying
+      "closed" -> (() => S.write(v.filter(lit(false)), path, "closed", 0L)),
+      "meta" -> (() => S.write(Seq(day).toDF("last_day").coalesce(1), path, "meta", 0L)))
   }
 
   /** Stage (but do NOT commit) epoch `e` of an SCD2 fold — exposed for
@@ -2337,10 +2335,10 @@ object TextOps {
     */
   private[graft] def stageScd2Append(
       snap: DataFrame, day: Long, path: String, e: Long): Unit = {
-    import graft.sources.IndexManifest
+    val S = StoredIndex.Scd2
     val s = snap.sparkSession
     import s.implicits._
-    val latest = IndexManifest.readRewrite(s, path, "latest", IndexManifest.Scd2)
+    val latest = S.read(s, path, "latest")
     val today = snap.select(col("doc_id"), md5(col("text")).as("h_new"))
     val j = latest.join(today, Seq("doc_id"), "full_outer")
       .localCheckpoint(true) // one join feeds latest-rewrite AND closed-append
@@ -2358,15 +2356,13 @@ object TextOps {
       when(col("content_hash").isNull || supersede, lit(day))
         .when(extend, lit(day))
         .otherwise(col("valid_to")).as("valid_to"))
-    newLatest.write.mode("overwrite")
-      .parquet(IndexManifest.epochDir(path, "latest", e))
-    j.filter(supersede)
-      .select(col("doc_id"), col("content_hash"), col("version"),
-        col("valid_from"), col("valid_to"))
-      .write.mode("overwrite").parquet(IndexManifest.epochDir(path, "closed", e))
-    Seq(day).toDF("last_day")
-      .coalesce(1)
-      .write.mode("overwrite").parquet(IndexManifest.epochDir(path, "meta", e))
+    S.run(
+      "latest" -> (() => S.write(newLatest, path, "latest", e)),
+      "closed" -> (() =>
+        S.write(j.filter(supersede)
+          .select(col("doc_id"), col("content_hash"), col("version"),
+            col("valid_from"), col("valid_to")), path, "closed", e)),
+      "meta" -> (() => S.write(Seq(day).toDF("last_day").coalesce(1), path, "meta", e)))
   }
 
   /** Fold snapshot `day` into the stored SCD2 table. Crash-atomic via
@@ -2380,9 +2376,7 @@ object TextOps {
     * ingest; both fail here instead of silently corrupting history.
     */
   def appendScd2Snapshot(snap: DataFrame, day: Long, path: String): Unit = {
-    import graft.sources.IndexManifest
-    val lastDay = IndexManifest.readRewrite(
-      snap.sparkSession, path, "meta", IndexManifest.Scd2).first().getLong(0)
+    val lastDay = StoredIndex.Scd2.read(snap.sparkSession, path, "meta").first().getLong(0)
     if (day <= lastDay)
       throw new IllegalArgumentException(
         s"appendScd2Snapshot(day=$day) but the stored table already folded " +
@@ -2401,18 +2395,16 @@ object TextOps {
 
   /** Stage (but do NOT commit) a purge epoch — for the kill drill. */
   private[queries] def stageScd2Purge(ids: DataFrame, path: String, e: Long): Unit = {
-    import graft.sources.IndexManifest
+    val S = StoredIndex.Scd2
     val s = ids.sparkSession
     val del = ids.select(col("doc_id").cast("long")).distinct()
       .localCheckpoint(true) // feeds the tombstone write AND the latest rewrite
-    del.write.mode("overwrite")
-      .parquet(IndexManifest.epochDir(path, "dels", e))
-    IndexManifest.readRewrite(s, path, "latest", IndexManifest.Scd2)
-      .join(del, Seq("doc_id"), "left_anti")
-      .write.mode("overwrite").parquet(IndexManifest.epochDir(path, "latest", e))
-    IndexManifest.readRewrite(s, path, "meta", IndexManifest.Scd2)
-      .coalesce(1)
-      .write.mode("overwrite").parquet(IndexManifest.epochDir(path, "meta", e))
+    S.run(
+      StoredIndex.Dels -> (() => S.write(del, path, StoredIndex.Dels, e)),
+      "latest" -> (() =>
+        S.write(S.read(s, path, "latest").join(del, Seq("doc_id"), "left_anti"),
+          path, "latest", e)),
+      "meta" -> (() => S.write(S.read(s, path, "meta").coalesce(1), path, "meta", e)))
   }
 
   /** Purge documents' ENTIRE version history from the stored SCD2 table
@@ -2435,10 +2427,9 @@ object TextOps {
     * so the append spec can demand frame equality with a full rebuild.
     */
   def readScd2(s: SparkSession, path: String): DataFrame = {
-    import graft.sources.IndexManifest
-    val lastDay = IndexManifest.readRewrite(s, path, "meta", IndexManifest.Scd2).first().getLong(0)
+    val lastDay = StoredIndex.Scd2.read(s, path, "meta").first().getLong(0)
     StoredIndex.Scd2.resolved(s, path)
-      .unionByName(IndexManifest.readRewrite(s, path, "latest", IndexManifest.Scd2))
+      .unionByName(StoredIndex.Scd2.read(s, path, "latest"))
       .select(col("doc_id"), col("version"), col("content_hash"),
         col("valid_from"), col("valid_to"),
         (col("valid_to") === lastDay).as("is_current"))
@@ -2499,7 +2490,7 @@ object TextOps {
     * counts rewrite-per-epoch); the manifest flip is the commit point.
     */
   def writeLshIndex(base: DataFrame, path: String): Unit = {
-    import graft.sources.IndexManifest
+    val L = StoredIndex.Lsh
     val s0 = base.sparkSession
     // independent epoch-0 components under one commit, overlapped
     // (guide §2.6); the shingle subtree recomputes concurrently in both
@@ -2510,47 +2501,28 @@ object TextOps {
     // AQE corruption, SCALING.md ("Round-22 (optimization round 2)") —
     // see SearchOps.writePostingsIndex).
     def rows() = minhashBandRows(shinglesOfDf(base.select(col("doc_id"), col("text"))))
-    StoredIndex.Lsh.build(s0, path)(
-      "bands" -> (() =>
-        rows().write.mode("overwrite").parquet(IndexManifest.epochDir(path, "bands", 0L))),
-      "bucket_counts" -> { () =>
-        rows().groupBy(col("band"), col("bkey"))
-          .agg(count(lit(1)).as("n_base"))
-          .write.mode("overwrite")
-          .parquet(IndexManifest.epochDir(path, "bucket_counts", 0L))
-      })
+    L.build(s0, path)(
+      "bands" -> (() => L.write(rows(), path, "bands", 0L)),
+      "bucket_counts" -> (() =>
+        L.write(rows().groupBy(col("band"), col("bkey"))
+          .agg(count(lit(1)).as("n_base")), path, "bucket_counts", 0L)))
   }
-
-  /** The resolved stored band rows: committed window minus tombstoned
-    * docs under epoch precedence ([[deleteFromLshIndex]]).
-    */
-  private[graft] def storedLshBands(s: SparkSession, path: String): DataFrame =
-    StoredIndex.Lsh.resolved(s, path)
 
   /** Stage (but do NOT commit) a forget epoch — for the kill drill. */
   private[queries] def stageLshDelete(ids: DataFrame, path: String, e: Long): Unit = {
-    import graft.sources.IndexManifest
+    val L = StoredIndex.Lsh
     val s = ids.sparkSession
     val del = ids.select(col("doc_id").cast("long")).distinct()
       .localCheckpoint(true) // feeds the tombstone write AND the count give-back
-    val gone = storedLshBands(s, path).join(del, "doc_id")
+    val gone = L.resolved(s, path).join(del, "doc_id")
       .groupBy(col("band"), col("bkey"))
-      .agg(count(lit(1)).as("n_sub"))
+      .agg(count(lit(1)).as("n_base"))
     // tombstone write and count give-back are independent stage writes
     // under one advance — overlapped (guide §2.6)
-    graft.sources.Overlap.run(
-      "dels" -> (() =>
-        del.write.mode("overwrite")
-          .parquet(IndexManifest.epochDir(path, "dels", e))),
-      "bucket_counts" -> { () =>
-        IndexManifest.readRewrite(s, path, "bucket_counts", IndexManifest.Lsh)
-          .join(gone, Seq("band", "bkey"), "left")
-          .select(col("band"), col("bkey"),
-            (col("n_base") - coalesce(col("n_sub"), lit(0L))).as("n_base"))
-          .filter(col("n_base") > 0L) // a rebuild has no zero-count buckets
-          .write.mode("overwrite")
-          .parquet(IndexManifest.epochDir(path, "bucket_counts", e))
-      })
+    L.run(
+      StoredIndex.Dels -> (() => L.write(del, path, StoredIndex.Dels, e)),
+      "bucket_counts" -> (() =>
+        L.write(L.giveBack(s, path, "bucket_counts", gone), path, "bucket_counts", e)))
   }
 
   /** Forget documents from the stored LSH index — the near-dup half of
@@ -2578,27 +2550,20 @@ object TextOps {
     * spec, which kills the append exactly here.
     */
   private[graft] def stageLshAppend(keptDelta: DataFrame, path: String, e: Long): Unit = {
-    import graft.sources.IndexManifest
+    val L = StoredIndex.Lsh
     val s = keptDelta.sparkSession
     val rows = minhashBandRows(shinglesOfDf(keptDelta.select(col("doc_id"), col("text"))))
       .localCheckpoint(true) // one signing pass feeds bands AND the counts merge
     // both stage writes read the materialized rows blocks — independent,
     // overlapped (guide §2.6)
-    graft.sources.Overlap.run(
-      "bands" -> (() =>
-        rows.write.mode("overwrite").parquet(IndexManifest.epochDir(path, "bands", e))),
-      "bucket_counts" -> { () =>
-        val deltaCounts = rows.groupBy(col("band"), col("bkey"))
-          .agg(count(lit(1)).as("n_add"))
-        // reads committed epoch e-1, writes epoch e: no self-overwrite, so no
-        // pre-materialization checkpoint needed (snapshot isolation for free)
-        IndexManifest.readRewrite(s, path, "bucket_counts", graft.sources.IndexManifest.Lsh)
-          .join(deltaCounts, Seq("band", "bkey"), "full_outer")
-          .select(col("band"), col("bkey"),
-            (coalesce(col("n_base"), lit(0L)) + coalesce(col("n_add"), lit(0L))).as("n_base"))
-          .write.mode("overwrite")
-          .parquet(IndexManifest.epochDir(path, "bucket_counts", e))
-      })
+    L.run(
+      "bands" -> (() => L.write(rows, path, "bands", e)),
+      // reads committed epoch e-1, writes epoch e: no self-overwrite, so no
+      // pre-materialization checkpoint needed (snapshot isolation for free)
+      "bucket_counts" -> (() =>
+        L.write(L.add(s, path, "bucket_counts",
+          rows.groupBy(col("band"), col("bkey")).agg(count(lit(1)).as("n_base"))),
+          path, "bucket_counts", e)))
   }
 
   /** Fold an ADMITTED delta into the stored LSH index — the write half
@@ -2717,7 +2682,7 @@ object TextOps {
     * read as "known" to the left-join novelty screen.
     */
   private[graft] def storedShingleDf(s: SparkSession, path: String): DataFrame =
-    graft.sources.IndexManifest.readAppendOnly(s, path, "shingle_counts", graft.sources.IndexManifest.Shingle)
+    StoredIndex.Shingle.readWindow(s, path, "shingle_counts")
       .groupBy(col("sh")).agg(sum(col("n")).as("sdf"))
       .filter(col("sdf") > 0L)
 
@@ -2868,7 +2833,7 @@ object TextOps {
       minhashBandRows(shinglesOfDf(delta.select($"doc_id", $"text")))
     val nDelta = deltaRows.groupBy($"band", $"bkey")
       .agg(count(lit(1)).as("n_delta"))
-    val counts = graft.sources.IndexManifest.readRewrite(s, path, "bucket_counts", graft.sources.IndexManifest.Lsh)
+    val counts = StoredIndex.Lsh.read(s, path, "bucket_counts")
     val hitBuckets = nDelta
       .join(counts, Seq("band", "bkey"), "left")
       .withColumn("n", $"n_delta" + coalesce($"n_base", lit(0L)))

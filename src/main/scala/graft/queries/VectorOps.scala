@@ -447,7 +447,8 @@ object VectorOps {
   // disagreeing on ONE hyperplane of a table is still caught by that
   // table. Measured in VectorRecallSpec on the adversarial random corpus:
   // 0.02 (single table) → 0.10 (L=8 union alone, = 1-(1-p)^L at the
-  // measured p≈0.02) → see SCALING.md with multiprobe. Probing is
+  // measured p≈0.02) → with multiprobe see
+  // SCALING.md ("Round-8: ANN recall: multiprobe"). Probing is
   // query-side only: candidate storage stays one slim triple per
   // (vector, table).
   //
@@ -2183,8 +2184,8 @@ object VectorOps {
     * identical fixed-point arithmetic (same floored-micros distances,
     * same (d2 asc, code asc) tiebreak, same integer means, same
     * empty-cell inherit) while scanning the corpus 2x instead of 8x.
-    * Measured: v_pq_recall_trained 3.26 s -> see SCALING.md
-    * ("trained-codebook PQ recall"). Driver traffic per round is the
+    * Measured: v_pq_recall_trained 3.26 s -> see
+    * SCALING.md ("trained-codebook PQ recall"). Driver traffic per round is the
     * m x k x subDim mean table (1,024 rows).
     */
   private def trainedPqCodewords(emb: DataFrame): DataFrame = {
@@ -3698,7 +3699,7 @@ object VectorOps {
       graft.functions.GraftFunctions.registerDotD(s)
       val (_, sqDir) = cascadeFleet(s, d)
       sq8TopKOf(sq8DecodedFromCodes(
-        storedSq8Codes(s, sqDir), storedSq8Stats(s, sqDir)))
+        StoredIndex.Sq8.resolved(s, sqDir), storedSq8Stats(s, sqDir)))
     },
     Some(s"""
       WITH $oracleSq8TopKCtes
@@ -3885,7 +3886,7 @@ object VectorOps {
       queryVecs.select(col("query_id").as("vec_id"), col("embedding")))
       .select(col("vec_id").as("query_id"),
         col("w_lo").as("q_lo"), col("w_hi").as("q_hi"))
-    val words = storedBqWords(s, path, asOf)
+    val words = StoredIndex.Bq.resolved(s, path, asOf)
     // both filters compose: a corpus-global keep set (semi-join on the
     // words) AND per-request pairs (keyed into the screen join itself)
     val eligible = keepIds.fold(words)(keep =>
@@ -4042,7 +4043,7 @@ object VectorOps {
       queryVecs.select(col("query_id").as("vec_id"), col("embedding")))
       .select(col("vec_id").as("query_id"),
         col("w_lo").as("q_lo"), col("w_hi").as("q_hi"))
-    val words = storedBqWords(s, bqPath, bqAsOf)
+    val words = StoredIndex.Bq.resolved(s, bqPath, bqAsOf)
     val eligible = keepIds.fold(words)(keep =>
       words.join(keep.select(col("vec_id")), Seq("vec_id"), "left_semi"))
     // two consumers (distinct-candidate fetch + tier-2 pair join) — the
@@ -4060,7 +4061,7 @@ object VectorOps {
       .select($"vec_id".as("query_id"), $"r".as("qr"), $"self_norm".as("q_norm"))
     val candIds = cands1.select($"cand_id").distinct()
     val cDec = sq8DecodedFromCodes(
-      storedSq8Codes(s, sq8Path, sq8AsOf)
+      StoredIndex.Sq8.resolved(s, sq8Path, sq8AsOf)
         .join(broadcast(candIds), $"vec_id" === $"cand_id").drop("cand_id"),
       stats)
       .select($"vec_id".as("cand_id"), $"r".as("cr"), $"self_norm".as("c_norm"))
@@ -4271,15 +4272,6 @@ object VectorOps {
   def compactBqIndex(s: SparkSession, path: String): Unit =
     StoredIndex.Bq.compact(s, path)
 
-  /** The resolved stored words: tombstones remove word rows from
-    * EARLIER epochs only (see [[deleteFromBqIndex]]); an as-of pin
-    * resolves words AND tombstones from the same past epoch — the
-    * family-wide time-travel rule.
-    */
-  private[graft] def storedBqWords(s: SparkSession, path: String,
-      asOf: Option[Long] = None): DataFrame =
-    StoredIndex.Bq.resolved(s, path, asOf)
-
   // ---------------------------------------------------------------------
   // Stored SQ8 index — the cascade's MIDDLE tier as a day-2 artifact.
   // A deployment trains its scalar quantizer once and stores it with
@@ -4306,8 +4298,7 @@ object VectorOps {
     val s = emb.sparkSession
     import s.implicits._
     graft.functions.GraftFunctions.registerSq8(s)
-    sq8StatsOn(emb).coalesce(1).write.mode("overwrite")
-      .parquet(IndexManifest.epochDir(path, "stats", 0L))
+    StoredIndex.Sq8.write(sq8StatsOn(emb).coalesce(1), path, "stats", 0L)
     // encode under the JUST-WRITTEN stats (read back, not recomputed):
     // the codes on disk are guaranteed consistent with the stored
     // quantizer even if the stats computation ever changes
@@ -4337,13 +4328,6 @@ object VectorOps {
       .getOrElse(StoredIndex.Sq8.state(path))
     s.read.parquet(IndexManifest.epochDir(path, "stats", st.baseEpoch))
   }
-
-  /** The resolved stored codes: tombstones remove code rows from
-    * EARLIER epochs only (epoch precedence, the family-wide rule).
-    */
-  private[graft] def storedSq8Codes(s: SparkSession, path: String,
-      asOf: Option[Long] = None): DataFrame =
-    StoredIndex.Sq8.resolved(s, path, asOf)
 
   /** Decode + self-norm from a STORED (vec_id, codes) frame (codes
     * byte-packed, format v2) under quantizer `stats` — the serving-side
@@ -4418,8 +4402,7 @@ object VectorOps {
   def compactSq8Index(s: SparkSession, path: String): Unit =
     StoredIndex.Sq8.compact(s, path, extra = (_, e) => Seq(
       "stats" -> (() =>
-        storedSq8Stats(s, path).coalesce(1).write.mode("overwrite")
-          .parquet(graft.sources.IndexManifest.epochDir(path, "stats", e)))))
+        StoredIndex.Sq8.write(storedSq8Stats(s, path).coalesce(1), path, "stats", e))))
 
   // ---------------------------------------------------------------------
   // CASCADE PAIR LIFECYCLE — the BQ and SQ8 artifacts a cascade serves
@@ -4443,9 +4426,9 @@ object VectorOps {
   def cascadeCoverageAudit(s: SparkSession, bqPath: String, sq8Path: String,
       bqAsOf: Option[Long] = None, sq8AsOf: Option[Long] = None): DataFrame = {
     import s.implicits._
-    val b = storedBqWords(s, bqPath, bqAsOf)
+    val b = StoredIndex.Bq.resolved(s, bqPath, bqAsOf)
       .select($"vec_id").withColumn("in_bq", lit(1L))
-    val q = storedSq8Codes(s, sq8Path, sq8AsOf)
+    val q = StoredIndex.Sq8.resolved(s, sq8Path, sq8AsOf)
       .select($"vec_id").withColumn("in_sq8", lit(1L))
     b.join(q, Seq("vec_id"), "full_outer")
       .agg(
@@ -4663,7 +4646,7 @@ object VectorOps {
     val dBands = bqBandRows(bqPackedOn(delta))
       .select($"vec_id".as("d_id"), $"w_lo".as("d_lo"), $"w_hi".as("d_hi"),
         $"band", $"bkey")
-    val bBands = bqBandRows(storedBqWords(s, path))
+    val bBands = bqBandRows(StoredIndex.Bq.resolved(s, path))
       .select($"vec_id".as("b_id"), $"w_lo".as("b_lo"), $"w_hi".as("b_hi"),
         $"band", $"bkey")
     val hits = dBands.join(bBands, Seq("band", "bkey"))

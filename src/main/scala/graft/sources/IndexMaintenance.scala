@@ -79,11 +79,11 @@ object IndexMaintenance {
           // count the committed head only, since readers never union
           // rewrite epochs
           val total = decl.fold(0L) { d =>
-            if (d.mainIsRewrite) IndexManifest.readRewrite(s, path, d.main, fmt).count()
-            else IndexManifest.readAppendOnly(s, path, d.main, fmt).count()
+            if (d.mainIsRewrite) d.read(s, path, d.main).count()
+            else d.readWindow(s, path, d.main).count()
           }
-          val dels = decl.flatMap(_.tombstones)
-            .fold(0L)(IndexManifest.readAppendOnly(s, path, _, fmt).count())
+          val dels = decl.flatMap(d => d.tombstones.map(d.readWindow(s, path, _).count()))
+            .getOrElse(0L)
           val window = st.epoch - st.baseEpoch
           // ONE unpinned-stale listing + ONE pin-ledger read per index,
           // shared by the verdict, the blocked check, and the blocker

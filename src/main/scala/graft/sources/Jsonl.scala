@@ -32,19 +32,10 @@ object Jsonl {
     * are dropped (`DROPMALFORMED`), and parseable objects missing the
     * identity fields (`doc_id`, `text`) are dropped too — same
     * strictly-more-robust-than-crashing policy as
-    * [[Fixtures]]' CSV readers. Works identically under `readStream`
-    * (file-arrival streaming) because the unified API shares the parse.
+    * [[Fixtures]]' CSV readers.
     */
   def documents(s: SparkSession, path: String): DataFrame =
     s.read
-      .schema(documentsSchema)
-      .option("mode", "DROPMALFORMED")
-      .json(path)
-      .na.drop("any", Seq("doc_id", "text"))
-
-  /** Streaming variant: jsonl files arriving in a directory. */
-  def documentsStream(s: SparkSession, path: String): DataFrame =
-    s.readStream
       .schema(documentsSchema)
       .option("mode", "DROPMALFORMED")
       .json(path)

@@ -1,15 +1,16 @@
 package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.{broadcast, col, max}
+import org.apache.spark.sql.functions.{broadcast, coalesce, col, lit, max}
 
 /** One stored-index family, DECLARED: its manifest [[IndexManifest.Format]]
   * plus the facts the commit protocol needs about its layout — and the
   * protocol operations derived from them ONCE. Families supply only
-  * their encoders, merges and give-backs; the epoch arithmetic, the
-  * single-writer re-check, the floor raise, the empty tombstone epoch
-  * and tombstone resolution by epoch precedence live here and nowhere
-  * else.
+  * their encoders and the DELTA frames of their count components; the
+  * epoch arithmetic, the single-writer re-check, the floor raise, the
+  * empty tombstone epoch, tombstone resolution by epoch precedence,
+  * every component's epoch path (`write`/`read`) and the count merges
+  * (`add`/`giveBack`) live here and nowhere else.
   *
   *   - `main`: the corpus-grain component a compaction folds (and the
   *     denominator of the advisor's dels rule), re-laid-out on
@@ -20,11 +21,14 @@ import org.apache.spark.sql.functions.{broadcast, col, max}
   *     negated counts, transition's subtraction fold).
   *   - `rewrite`: components staged as a FULL copy per epoch — copied
   *     forward verbatim by a compaction.
-  *   - `sequential`: the family's build and compaction writes run in
-  *     declaration order on the caller thread instead of overlapped.
-  *     SCD2's latest/closed and the transition graph's edges/nodes
-  *     derive from one shared input plan, which concurrent writers must
-  *     never share (the ProfRace3 AQE rule,
+  *   - `counts`: the rewrite components that are "base plus a summed
+  *     delta" — each one's key columns and its long value column. An
+  *     append stages [[add]] of its delta, a forget stages [[giveBack]].
+  *   - `sequential`: the family's build, stage and compaction writes
+  *     run in declaration order on the caller thread instead of
+  *     overlapped. SCD2's latest/closed and the transition graph's
+  *     edges/nodes derive from one shared input plan, which concurrent
+  *     writers must never share (the ProfRace3 AQE rule,
   *     SCALING.md ("Round-22 (optimization round 2)") — see
   *     `SearchOps.writePostingsIndex`).
   *   - `broadcastDels`: the resolution join broadcasts the tombstone
@@ -38,10 +42,14 @@ final case class StoredIndex(
     mainParts: Seq[String] = Nil,
     tombstoneKey: Option[String] = None,
     rewrite: Seq[String] = Nil,
+    counts: Map[String, StoredIndex.Count] = Map.empty,
     sequential: Boolean = false,
     broadcastDels: Boolean = false) {
 
   import StoredIndex.Task
+
+  require(counts.keySet.subsetOf(rewrite.toSet),
+    s"count components of '${format.family}' must be rewrite components")
 
   def family: String = format.family
 
@@ -57,8 +65,53 @@ final case class StoredIndex(
   /** The committed head epoch. */
   def head(path: String): Long = state(path).epoch
 
-  private def run(tasks: Seq[Task]): Unit =
+  /** Run one epoch's component writes: in declaration order on the
+    * caller thread when the family is `sequential`, else overlapped.
+    */
+  def run(tasks: Task*): Unit =
     if (sequential) tasks.foreach(_._2()) else Overlap.run(tasks: _*)
+
+  /** Write `df` as component `comp` of epoch `e` — overwrite-mode into
+    * e's own directory, so a crashed stage's retry replaces it.
+    */
+  def write(df: DataFrame, path: String, comp: String, e: Long): Unit =
+    df.write.mode("overwrite").parquet(IndexManifest.epochDir(path, comp, e))
+
+  /** Read rewrite component `comp`: the committed epoch's full copy, or
+    * the as-of pinned epoch's.
+    */
+  def read(s: SparkSession, path: String, comp: String,
+      asOf: Option[Long] = None): DataFrame =
+    IndexManifest.readRewrite(s, path, comp, format, asOf)
+
+  /** Read append-only component `comp` over the committed window (or
+    * the as-of pinned one), without its `epoch` column.
+    */
+  def readWindow(s: SparkSession, path: String, comp: String,
+      asOf: Option[Long] = None): DataFrame =
+    IndexManifest.readAppendOnly(s, path, comp, format, asOf)
+
+  /** Count component `comp` plus `delta` (its keys and value column):
+    * a key absent on either side counts 0, nothing is dropped.
+    */
+  def add(s: SparkSession, path: String, comp: String, delta: DataFrame): DataFrame = {
+    val c = counts(comp)
+    read(s, path, comp).join(c.delta(delta), c.keys, "full_outer")
+      .select(c.keys.map(col) :+
+        (coalesce(col(c.value), lit(0L)) + coalesce(col("delta"), lit(0L))).as(c.value): _*)
+  }
+
+  /** Count component `comp` minus `delta`, the mass a forget gives
+    * back: a key whose count reaches 0 leaves the table (a rebuild has
+    * no zero-count rows).
+    */
+  def giveBack(s: SparkSession, path: String, comp: String, delta: DataFrame): DataFrame = {
+    val c = counts(comp)
+    read(s, path, comp).join(c.delta(delta), c.keys, "left")
+      .select(c.keys.map(col) :+
+        (col(c.value) - coalesce(col("delta"), lit(0L))).as(c.value): _*)
+      .filter(col(c.value) > 0L)
+  }
 
   /** The schema-carrying empty tombstone write at epoch `e` — every
     * build starts with one, every compaction resets to one.
@@ -67,8 +120,7 @@ final case class StoredIndex(
     tombstoneKey.map { key =>
       StoredIndex.Dels -> { () =>
         import s.implicits._
-        Seq.empty[Long].toDF(key).write.mode("overwrite")
-          .parquet(IndexManifest.epochDir(path, StoredIndex.Dels, e))
+        write(Seq.empty[Long].toDF(key), path, StoredIndex.Dels, e)
       }
     }
 
@@ -77,7 +129,7 @@ final case class StoredIndex(
     * unconditional initial commit.
     */
   def build(s: SparkSession, path: String)(tasks: Task*): Unit = {
-    run(tasks ++ emptyTombstones(s, path, 0L))
+    run(tasks ++ emptyTombstones(s, path, 0L): _*)
     IndexManifest.commit(path, 0L, fmt = format)
   }
 
@@ -96,9 +148,7 @@ final case class StoredIndex(
   def stageTombstones(ids: DataFrame, path: String, e: Long): Unit = {
     val key = tombstoneKey.getOrElse(
       throw new UnsupportedOperationException(s"family '$family' has no tombstones"))
-    ids.select(col(key).cast("long")).distinct()
-      .write.mode("overwrite")
-      .parquet(IndexManifest.epochDir(path, StoredIndex.Dels, e))
+    write(ids.select(col(key).cast("long")).distinct(), path, StoredIndex.Dels, e)
   }
 
   /** Forget ids from a family with no stats to give back: one tombstone
@@ -173,10 +223,9 @@ final case class StoredIndex(
       fold.fold(writeMain(resolved(s, path), path, e))(_(e))
     }
     val copies: Seq[Task] = rewrite.map(comp => comp -> { () =>
-      IndexManifest.readRewrite(s, path, comp, format)
-        .write.mode("overwrite").parquet(IndexManifest.epochDir(path, comp, e))
+      write(read(s, path, comp), path, comp, e)
     })
-    run(Seq(mainTask) ++ copies ++ emptyTombstones(s, path, e) ++ extra(st, e))
+    run(Seq(mainTask) ++ copies ++ emptyTombstones(s, path, e) ++ extra(st, e): _*)
   }
 
   /** Compact in place: fold the committed window into ONE fresh epoch
@@ -203,18 +252,29 @@ object StoredIndex {
   /** The tombstone component's name in every family that has one. */
   val Dels = "dels"
 
+  /** A count component's declared shape: its key columns and its long
+    * value column. A delta frame carries the same columns.
+    */
+  final case class Count(keys: Seq[String], value: String) {
+    private[StoredIndex] def delta(df: DataFrame): DataFrame =
+      df.select(keys.map(col) :+ col(value).as("delta"): _*)
+  }
+
   val Postings = StoredIndex(IndexManifest.Postings, "postings", Seq("bucket"),
-    Some("doc_id"), Seq("terms", "corpus"))
+    Some("doc_id"), Seq("terms", "corpus"), Map("terms" -> Count(Seq("t"), "df")))
   val Lsh = StoredIndex(IndexManifest.Lsh, "bands",
-    tombstoneKey = Some("doc_id"), rewrite = Seq("bucket_counts"))
+    tombstoneKey = Some("doc_id"), rewrite = Seq("bucket_counts"),
+    counts = Map("bucket_counts" -> Count(Seq("band", "bkey"), "n_base")))
   val Shingle = StoredIndex(IndexManifest.Shingle, "shingle_counts", Seq("bucket"))
   val IvfPq = StoredIndex(IndexManifest.IvfPq, "codes", Seq("cell"), Some("vec_id"))
   val Bq = StoredIndex(IndexManifest.Bq, "words", tombstoneKey = Some("vec_id"))
   val Sq8 = StoredIndex(IndexManifest.Sq8, "codes", tombstoneKey = Some("vec_id"))
   val Cooccur = StoredIndex(IndexManifest.Cooccur, "ui",
-    tombstoneKey = Some("user_id"), rewrite = Seq("pairs", "degrees"))
+    tombstoneKey = Some("user_id"), rewrite = Seq("pairs", "degrees"),
+    counts = Map("pairs" -> Count(Seq("i1", "i2"), "n_users")))
   val Transition = StoredIndex(IndexManifest.Transition, "edges",
-    rewrite = Seq("edges", "nodes"), sequential = true)
+    rewrite = Seq("edges", "nodes"), counts = Map("edges" -> Count(Seq("src", "dst"), "w")),
+    sequential = true)
   val Scd2 = StoredIndex(IndexManifest.Scd2, "closed",
     tombstoneKey = Some("doc_id"), rewrite = Seq("latest", "meta"), sequential = true)
   val Layout = StoredIndex(IndexManifest.Layout, "data",

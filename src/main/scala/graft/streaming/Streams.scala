@@ -7,7 +7,7 @@ import org.apache.spark.sql.Row
 
 import graft.model.UserBehavior
 import graft.operators.Windowed
-import graft.sources.EpochLedger
+import graft.sources.{EpochLedger, StoredIndex}
 
 /** Structured-Streaming wiring for the windowed statistics (SURVEY §2.4
   * W1-W8, §2.6 T1-T3, §2.9 K8).
@@ -594,8 +594,7 @@ object Streams {
       delay: String,
   ): DataFrame = {
     val s = delta.sparkSession
-    val withinCap = graft.sources.IndexManifest
-      .readRewrite(s, lshIndexPath, "bucket_counts", graft.sources.IndexManifest.Lsh)
+    val withinCap = StoredIndex.Lsh.read(s, lshIndexPath, "bucket_counts")
       .filter(col("n_base") + 1 <= graft.queries.TextOps.maxBucket)
       .select("band", "bkey")
     val hits = graft.queries.TextOps.streamBandRows(delta)
@@ -633,7 +632,7 @@ object Streams {
   ): DataFrame = {
     import graft.queries.VectorOps
     val s = arrivals.sparkSession
-    val baseBands = VectorOps.bqBandRows(VectorOps.storedBqWords(s, bqIndexPath))
+    val baseBands = VectorOps.bqBandRows(StoredIndex.Bq.resolved(s, bqIndexPath))
       .withColumnRenamed("vec_id", "b_id")
       .withColumnRenamed("w_lo", "b_lo")
       .withColumnRenamed("w_hi", "b_hi")
@@ -692,14 +691,13 @@ object Streams {
     */
   private def scoreAgainstIndexStats(
       delta: DataFrame, postingsIndexPath: String, terms: Seq[String]): DataFrame = {
-    import graft.sources.IndexManifest
     val s = delta.sparkSession
-    val stats = IndexManifest.readRewrite(s, postingsIndexPath, "corpus", IndexManifest.Postings).first()
+    val stats = StoredIndex.Postings.read(s, postingsIndexPath, "corpus").first()
     val n = stats.getAs[Long]("n_docs")
     val tl = stats.getAs[Long]("total_tokens")
     val idf: Map[String, Long] =
       if (n == 0L || tl == 0L) Map.empty
-      else IndexManifest.readRewrite(s, postingsIndexPath, "terms", IndexManifest.Postings)
+      else StoredIndex.Postings.read(s, postingsIndexPath, "terms")
         .filter(col("t").isin(terms: _*))
         .collect()
         .map(r => r.getAs[String]("t") -> (n * 1000000L / r.getAs[Long]("df")))
@@ -1046,15 +1044,6 @@ object Streams {
       }
       .toDF()
   }
-
-  /** Convenience launcher: console sink (K1 `print()` equivalent). */
-  def toConsole(df: DataFrame, mode: OutputMode = OutputMode.Update()): StreamingQuery =
-    df.writeStream
-      .outputMode(mode)
-      .format("console")
-      .option("truncate", "false")
-      .trigger(Trigger.ProcessingTime("1 second"))
-      .start()
 
   // ---------------------------------------------------------------------
   // Standing erasure queue — the streaming twin of the Erasure
@@ -1407,9 +1396,9 @@ object Streams {
           batch, bqPath, sq8Path, root, failAfter)
     } else {
       val s = batch.sparkSession
-      val stored = graft.queries.VectorOps.storedBqWords(s, bqPath)
+      val stored = StoredIndex.Bq.resolved(s, bqPath)
         .select("vec_id")
-        .union(graft.queries.VectorOps.storedSq8Codes(s, sq8Path)
+        .union(StoredIndex.Sq8.resolved(s, sq8Path)
           .select("vec_id"))
       // persist so the emptiness probe and the append's delta staging
       // evaluate the guard ONCE — each tier's id column is scanned one

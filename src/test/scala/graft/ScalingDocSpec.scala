@@ -14,7 +14,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * Convention: cite numbers as `recorded in SCALING.md ("<heading
   * fragment>")` — the fragment must appear in some `#`-prefixed heading.
   * A bare `recorded in SCALING.md` with no quoted section also fails:
-  * unanchored claims are how the drift crept in.
+  * unanchored claims are how the drift crept in. In `src/main` EVERY
+  * mention of SCALING.md must be such a marker (text may follow the
+  * closing quote, as in `SCALING.md ("<heading>" section, PQ rows)`).
   *
   * The same holds for probe names: a `Prof*` object (or the old streaming
   * bench main) named in `src/` or `tools/` must still exist as an
@@ -23,8 +25,9 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class ScalingDocSpec extends AnyFunSuite {
 
-  private val marker = """SCALING\.md \("([^"]+)"\)""".r
+  private val marker = """SCALING\.md \("([^"\n]+)"""".r
   private val bare = """recorded in SCALING\.md(?! \(")""".r
+  private val unmarked = """SCALING\.md(?! \(")""".r
   private val probe = """\b(Prof[A-Z]\w*|StreamB[e]nch)\b""".r
 
   private def sources(exts: String*): Seq[Path] =
@@ -62,6 +65,17 @@ class ScalingDocSpec extends AnyFunSuite {
     }
     assert(loose.isEmpty,
       s"""unanchored claims (add ("<heading fragment>")): ${loose.mkString(", ")}""")
+  }
+
+  test("every SCALING.md mention in src/main is a quoted-heading marker") {
+    val loose = scalaSources.filter(_.startsWith(Paths.get("src", "main"))).flatMap { p =>
+      val lines = Files.readAllLines(p).asScala.toSeq
+      lines.zipWithIndex.collect {
+        case (l, i) if unmarked.findFirstIn(l).isDefined => s"$p:${i + 1}"
+      }
+    }
+    assert(loose.isEmpty,
+      s"""SCALING.md cited without ("<heading fragment>"): ${loose.mkString(", ")}""")
   }
 
   test("every probe named in src/ or tools/ is an object that still exists") {

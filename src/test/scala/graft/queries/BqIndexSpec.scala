@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.SparkSpec
-import graft.sources.IndexManifest
+import graft.sources.{IndexManifest, StoredIndex}
 
 /** The stored binary-quantization index: the banded screen must EQUAL a
   * brute-force Hamming screen (the 4-band pigeonhole claims zero false
@@ -73,7 +73,7 @@ class BqIndexSpec extends SparkSpec {
     VectorOps.deleteFromBqIndex(Seq(7L).toDF("vec_id"), dir)
     assert(IndexManifest.committedEpoch(dir, IndexManifest.Bq) === 1L)
     assert(screen(probe, dir)(9000L) === "kept")
-    assert(!VectorOps.storedBqWords(spark, dir)
+    assert(!StoredIndex.Bq.resolved(spark, dir)
       .collect().exists(_.getLong(0) === 7L))
 
     // epoch precedence: re-appending the id AFTER the delete resurrects
@@ -97,7 +97,7 @@ class BqIndexSpec extends SparkSpec {
     assert(screen(probe, dir)(9000L) === "kept")
     // and the compacted index is still appendable
     VectorOps.appendBqIndex(df(Seq(base(13))), dir)
-    assert(VectorOps.storedBqWords(spark, dir).count() === 29L)
+    assert(StoredIndex.Bq.resolved(spark, dir).count() === 29L)
   }
 
   test("append equals union rebuild; killed append invisible, retry safe") {
@@ -126,7 +126,7 @@ class BqIndexSpec extends SparkSpec {
 
     // stored words equal a union rebuild, bit for bit
     VectorOps.writeBqIndex(df(base ++ day2), reb)
-    def words(p: String) = VectorOps.storedBqWords(spark, p)
+    def words(p: String) = StoredIndex.Bq.resolved(spark, p)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     assert(words(dir) === words(reb))
 

@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
-import graft.sources.IndexManifest
+import graft.sources.{IndexManifest, StoredIndex}
 
 /** Stored co-occurrence index: incremental fold == full rebuild, with
   * the hard case pinned — a user CROSSING the degree cap mid-history
@@ -172,7 +172,7 @@ class CooccurIndexSpec extends SparkSpec {
     val degs = IndexManifest.readRewrite(spark, dir, "degrees", IndexManifest.Cooccur)
       .collect().map(_.getLong(0)).toSet
     assert(!degs.contains(9L), "forgotten user's degree row must be erased")
-    assert(GraphOps.resolvedUi(spark, dir)
+    assert(StoredIndex.Cooccur.resolved(spark, dir)
       .filter($"user_id" === 9L).count() === 0L)
 
     // eligible supporter: their pair support is given back exactly

@@ -4,7 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
-import graft.sources.{IndexManifest, Tables}
+import graft.sources.{IndexManifest, StoredIndex, Tables}
 
 /** The erasure orchestrator: one "forget these docs/users" call fans
   * out to every deployed stored artifact, and the crash/resume
@@ -98,7 +98,7 @@ class ErasureSpec extends SparkSpec {
     // behavioral spot-checks: the erased ids are gone from resolved views
     val goneIds = gone.select($"doc_id").as[Long].collect().toSet
     assert(goneIds.nonEmpty)
-    val lshDocs = TextOps.storedLshBands(spark, targets.lsh.get)
+    val lshDocs = StoredIndex.Lsh.resolved(spark, targets.lsh.get)
       .select($"doc_id").distinct().as[Long].collect().toSet
     assert(lshDocs.intersect(goneIds).isEmpty)
   }
@@ -244,7 +244,7 @@ class ErasureSpec extends SparkSpec {
     assert(Erasure.committedEpochs(targets.ordered).values.forall(_ == 1L))
 
     val goneUsers = users.as[Long].collect().toSet
-    val uiUsers = GraphOps.resolvedUi(spark, co)
+    val uiUsers = StoredIndex.Cooccur.resolved(spark, co)
       .select($"user_id").distinct().as[Long].collect().toSet
     assert(uiUsers.intersect(goneUsers).isEmpty)
     // the SOURCE LOG forgot them too — the table leg of the fan-out

@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
-import graft.sources.IndexManifest
+import graft.sources.{IndexManifest, StoredIndex}
 
 /** Forgetting docs from the stored LSH index: the screen must equal an
   * index rebuilt without them (tombstones + bucket-count give-back,
@@ -49,7 +49,7 @@ class LshDeleteSpec extends SparkSpec {
       .collect().map(r => (r.getInt(0), r.getStruct(1).toString) -> r.getLong(2)).toMap
     assert(counts(dir) === counts(reb),
       "count give-back must equal the rebuild (zero rows dropped)")
-    def bandDocs(d: String) = TextOps.storedLshBands(spark, d)
+    def bandDocs(d: String) = StoredIndex.Lsh.resolved(spark, d)
       .select($"doc_id").distinct().collect().map(_.getLong(0)).toSet
     assert(bandDocs(dir) === Set(2L, 3L))
   }

@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.SparkSpec
-import graft.sources.IndexManifest
+import graft.sources.{IndexManifest, StoredIndex}
 
 /** The stored SQ8 index — the cascade's middle tier as a day-2
   * artifact: stored codes must equal a fresh encode bit for bit, the
@@ -25,7 +25,7 @@ class Sq8IndexSpec extends SparkSpec {
     * column (one unsigned byte per component).
     */
   private def codeMap(p: String): Map[Long, Seq[Long]] =
-    VectorOps.storedSq8Codes(spark, p).collect()
+    StoredIndex.Sq8.resolved(spark, p).collect()
       .map(r => r.getLong(0) ->
         r.getAs[Array[Byte]](1).map(b => (b & 0xFF).toLong).toSeq)
       .toMap
@@ -40,7 +40,7 @@ class Sq8IndexSpec extends SparkSpec {
     assert(codeMap(dir) === expect)
     // format v2: the stored column IS the packed binary, one byte per
     // component — 64 B/vector, not v1's 512 B array<bigint>
-    val stored = VectorOps.storedSq8Codes(spark, dir)
+    val stored = StoredIndex.Sq8.resolved(spark, dir)
     assert(stored.schema("codes").dataType ===
       org.apache.spark.sql.types.BinaryType)
     assert(stored.collect().forall(_.getAs[Array[Byte]](1).length === 64))
@@ -97,7 +97,7 @@ class Sq8IndexSpec extends SparkSpec {
     assert(codeMap(dir).contains(7L))
 
     // as-of pin below the re-append still sees the deletion
-    assert(!VectorOps.storedSq8Codes(spark, dir, asOf = Some(1L))
+    assert(!StoredIndex.Sq8.resolved(spark, dir, asOf = Some(1L))
       .collect().map(_.getLong(0)).contains(7L))
 
     VectorOps.deleteFromSq8Index(df(Seq(base(11))).select("vec_id"), dir)

@@ -3,6 +3,8 @@ package graft.sources
 import java.util.concurrent.{CountDownLatch, TimeUnit}
 import java.util.concurrent.atomic.AtomicBoolean
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
@@ -74,7 +76,7 @@ class StoredIndexSpec extends SparkSpec {
     }
     // the compacted heads still read
     assert(StoredIndex.IvfPq.resolved(spark, vdir).count() > 0L)
-    assert(GraphOps.resolvedUi(spark, cdir).count() === 6L)
+    assert(StoredIndex.Cooccur.resolved(spark, cdir).count() === 6L)
   }
 
   test("advisor counts scd2 purge tombstones") {
@@ -141,5 +143,112 @@ class StoredIndexSpec extends SparkSpec {
       Thread.sleep(50L)
     assert(tracker.getActiveJobIds().isEmpty, "the sibling's job kept running")
     assert(System.nanoTime() - t0 < 50000000000L, "run waited out the sibling job")
+  }
+
+  /** A committed transition graph whose `edges` count component is
+    * exactly `edges` (items as strings, the stored schema).
+    */
+  private def edgesIndex(edges: Seq[(String, String, Long)]): String = {
+    val dir = tmp("count-merge")
+    val T = StoredIndex.Transition
+    T.build(spark, dir)(
+      "edges" -> (() => T.write(edges.toDF("src", "dst", "w"), dir, "edges", 0L)),
+      "nodes" -> (() => T.write(Seq("a").toDF("item"), dir, "nodes", 0L)))
+    dir
+  }
+
+  private def counts(df: org.apache.spark.sql.DataFrame): Set[(String, String, Long)] =
+    df.as[(String, String, Long)].collect().toSet
+
+  test("add inserts a key absent from the base and sums a present one") {
+    val dir = edgesIndex(Seq(("a", "b", 3L), ("b", "c", 1L)))
+    val delta = Seq(("a", "b", 2L), ("c", "d", 4L)).toDF("src", "dst", "w")
+    assert(counts(StoredIndex.Transition.add(spark, dir, "edges", delta)) ===
+      Set(("a", "b", 5L), ("b", "c", 1L), ("c", "d", 4L)))
+  }
+
+  test("giveBack drops a key whose count reaches 0 and leaves untouched keys alone") {
+    val dir = edgesIndex(Seq(("a", "b", 3L), ("b", "c", 1L), ("c", "d", 5L)))
+    val delta = Seq(("a", "b", 1L), ("b", "c", 1L)).toDF("src", "dst", "w")
+    assert(counts(StoredIndex.Transition.giveBack(spark, dir, "edges", delta)) ===
+      Set(("a", "b", 2L), ("c", "d", 5L)))
+  }
+
+  test("a sequential family's append stage runs its tasks on the caller thread, in order") {
+    val caller = Thread.currentThread()
+    val ran = new java.util.concurrent.ConcurrentLinkedQueue[(String, Thread)]()
+    def task(name: String): StoredIndex.Task =
+      name -> { () => ran.add(name -> Thread.currentThread()); () }
+    StoredIndex.Transition.run(task("edges"), task("nodes"))
+    assert(ran.asScala.toSeq === Seq("edges" -> caller, "nodes" -> caller))
+    ran.clear()
+    StoredIndex.Lsh.run(task("bands"), task("bucket_counts"))
+    assert(ran.asScala.toSeq.forall(_._2 ne caller), "an overlapped family runs on the pool")
+
+    // the append stage itself: Overlap tags every job its pool runs, so
+    // no job of a sequential stage may carry that tag
+    val tags = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        tags.add(Option(e.properties).map(_.getProperty("spark.job.tags", "")).getOrElse(""))
+    }
+    val sc = spark.sparkContext
+    def jobsOf(body: => Unit): Seq[String] = {
+      tags.clear()
+      sc.addSparkListener(listener)
+      try {
+        body
+        // a marker job drains the listener bus: events arrive in order
+        val marker = s"drain-${java.util.UUID.randomUUID()}"
+        sc.addJobTag(marker)
+        try sc.parallelize(1 to 1, 1).count() finally sc.removeJobTag(marker)
+        val deadline = System.nanoTime() + 30000000000L
+        while (!tags.asScala.exists(_.contains(marker)) && System.nanoTime() < deadline)
+          Thread.sleep(20L)
+        tags.asScala.toSeq.filterNot(_.contains(marker))
+      } finally sc.removeSparkListener(listener)
+    }
+    def job(name: String): StoredIndex.Task =
+      name -> { () => sc.parallelize(1 to 2, 2).count(); () }
+    val overlapped = jobsOf(StoredIndex.Lsh.run(job("a"), job("b")))
+    assert(overlapped.nonEmpty && overlapped.forall(_.contains("graft-overlap-")),
+      s"an overlapped run's jobs carry the Overlap tag: $overlapped")
+    val evs = Seq((1L, 1L, 1L, "a"), (1L, 2L, 2L, "b"), (2L, 1L, 3L, "b"), (2L, 2L, 4L, "c"))
+      .toDF("user_id", "ts_sec", "event_id", "item")
+    val dir = tmp("transition-seq")
+    GraphOps.writeTransitionGraph(evs, dir)
+    val staged = jobsOf(GraphOps.stageTransitionAppend(
+      Seq((1L, 3L, 5L, "c"), (1L, 4L, 6L, "a")).toDF("user_id", "ts_sec", "event_id", "item"),
+      dir, 1L))
+    assert(staged.nonEmpty && !staged.exists(_.contains("graft-overlap-")),
+      s"a sequential stage ran a job on the Overlap pool: $staged")
+  }
+
+  test("outside sources/, no code names a component's epoch path or runs its own Overlap") {
+    import java.nio.file.{Files, Paths}
+    val main = Paths.get("src", "main", "scala", "graft")
+    val files = Files.walk(main).iterator.asScala
+      .filter(_.toString.endsWith(".scala"))
+      .filterNot(_.startsWith(main.resolve("sources")))
+      .toSeq
+    assert(files.size > 20, "source scan found too little — layout drifted")
+    // an epochDir outside sources/ may only be read back (the SQ8
+    // floor stats, the zone map's data read-back), never written
+    val epochRead = """read\.parquet\((graft\.sources\.)?IndexManifest\.epochDir\(""".r
+    val hits = files.flatMap { p =>
+      val text = new String(Files.readAllBytes(p), "UTF-8")
+      def count(needle: String): Int =
+        java.util.regex.Pattern.quote(needle).r.findAllMatchIn(text).size
+      Seq(
+        "readRewrite(" -> count("readRewrite("),
+        "readAppendOnly(" -> count("readAppendOnly("),
+        "epochDir( outside read.parquet" ->
+          (count("epochDir(") - epochRead.findAllMatchIn(text).size),
+        // CurationOps' overlapped drills run independent roots, not one
+        // family's stage
+        "Overlap.run" -> (if (p.endsWith("CurationOps.scala")) 0 else count("Overlap.run")))
+        .collect { case (what, n) if n > 0 => s"$p: $n x $what" }
+    }
+    assert(hits.isEmpty, hits.mkString("\n"))
   }
 }

@@ -2,7 +2,7 @@ package graft.streaming
 
 import graft.SparkSpec
 import graft.queries.VectorOps
-import graft.sources.IndexManifest
+import graft.sources.{IndexManifest, StoredIndex}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 
 /** The standing cascade ingest: every micro-batch must land in BOTH
@@ -134,7 +134,7 @@ class CascadeIngestSpec extends SparkSpec {
     Streams.applyCascadeIngestBatch(df(delta), bq, sq, ledger, batchId = 0L)
     assert(epochs(bq, sq) === ((1L, 1L)), "replay must not advance either manifest")
     assert(audit(bq, sq) === ((13L, 0L, 0L)))
-    val codeRows = VectorOps.storedSq8Codes(spark, sq)
+    val codeRows = StoredIndex.Sq8.resolved(spark, sq)
       .filter(org.apache.spark.sql.functions.col("vec_id") >= 300L).count()
     assert(codeRows === 3L, "exactly one live codes row per ingested id")
   }
@@ -219,7 +219,7 @@ class CascadeIngestSpec extends SparkSpec {
     Streams.applyCascadeIngestBatch(
       df(Seq((600L, v600), (602L, vec()))), bq, sq, ledger, 1L, dedupIds = true)
     assert(audit(bq, sq) === ((13L, 0L, 0L)))
-    val codeRows = VectorOps.storedSq8Codes(spark, sq)
+    val codeRows = StoredIndex.Sq8.resolved(spark, sq)
       .filter(org.apache.spark.sql.functions.col("vec_id") === 600L).count()
     assert(codeRows === 1L, "the redelivered id must stay single-rowed in tier 2")
     // a batch that is ALL redelivery appends nothing and bumps no epoch

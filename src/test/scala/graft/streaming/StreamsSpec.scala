@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import graft.SparkSpec
 import graft.model.UserBehavior
 import graft.operators.Windowed
-import graft.sources.Fixtures
+import graft.sources.{Fixtures, StoredIndex}
 
 /** events-table row shape for the funnel parity test (top-level so the
   * MemoryStream encoder derives).
@@ -1339,7 +1339,7 @@ class StreamsSpec extends SparkSpec {
     val tblUsers = LayoutOps.readEventTable(spark, tbl)
       .select($"user_id").distinct().as[Long].collect().toSet
     assert(tblUsers.intersect(goneUsers).isEmpty && tblUsers.nonEmpty)
-    val uiUsers = GraphOps.resolvedUi(spark, co)
+    val uiUsers = StoredIndex.Cooccur.resolved(spark, co)
       .select($"user_id").distinct().as[Long].collect().toSet
     assert(uiUsers.intersect(goneUsers).isEmpty)
     val reb = tmp("ues-tr-reb")
